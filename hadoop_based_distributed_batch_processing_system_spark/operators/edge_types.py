@@ -32,6 +32,7 @@ from hadoop_based_distributed_batch_processing_system_spark.registry import (
     register,
 )
 from hadoop_based_distributed_batch_processing_system_spark.sources.io import (
+    build_once,
     corpus_tag,
     load_table,
 )
@@ -72,33 +73,16 @@ def _decimal_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _decimal_fixture(spark: SparkSession, sf_dir: str) -> str:
     """Write the decimal frame ONCE per corpus as a parquet
-    side-fixture (flock + stamp, the conftest discipline) so the read
-    path exercises parquet's real decimal physical encoding — logical
-    type DECIMAL(18,2), not a double in disguise."""
-    import fcntl
-
+    side-fixture so the read path exercises parquet's real decimal
+    physical encoding — logical type DECIMAL(18,2), not a double in
+    disguise."""
     root = _decimal_fixture_dir(sf_dir)
-    stamp_file = os.path.join(root, "_BUILT")
-    stamp = "decfix-v1"
-    if os.path.exists(stamp_file) and open(stamp_file).read() == stamp:
-        return root
-    os.makedirs(root, exist_ok=True)
-    lock_fh = open(os.path.join(root, ".lock"), "w")
-    fcntl.flock(lock_fh, fcntl.LOCK_EX)
-    try:
-        if os.path.exists(stamp_file) and open(stamp_file).read() == stamp:
-            return root
-        _decimal_frame(spark, sf_dir).write.mode("overwrite").parquet(
+    return build_once(
+        root, "_BUILT", "decfix-v1",
+        lambda: _decimal_frame(spark, sf_dir).write.mode("overwrite").parquet(
             os.path.join(root, "decimals")
-        )
-        tmp = os.path.join(root, f"._BUILT.{os.getpid()}.tmp")
-        with open(tmp, "w") as fh:
-            fh.write(stamp)
-        os.replace(tmp, stamp_file)
-    finally:
-        fcntl.flock(lock_fh, fcntl.LOCK_UN)
-        lock_fh.close()
-    return root
+        ),
+    )
 
 
 @register(

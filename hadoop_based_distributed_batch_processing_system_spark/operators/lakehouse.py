@@ -12,9 +12,10 @@ The commit-log kernel (OCC protocol, staged writes, DV replay,
 manifest stats, change units) lives in ``operators/scans.py``; this
 module composes WORKFLOWS on top of it, the way Delta/Iceberg layer
 WAP and CDF on their core log. Everything here follows the package's
-table-log disciplines: own root per mutating lifecycle, flock + spec
-stamp idempotence, one staged write job per statement, one OCC commit
-per atomic change, exact-integer fingerprints in every oracle.
+table-log disciplines: own root per mutating lifecycle, build-once
+fixtures (``sources.io.build_once``), one staged write job per
+statement, one OCC commit per atomic change, exact-integer
+fingerprints in every oracle.
 """
 
 from __future__ import annotations
@@ -30,8 +31,11 @@ from hadoop_based_distributed_batch_processing_system_spark.registry import (
     register,
 )
 from hadoop_based_distributed_batch_processing_system_spark.sources.io import (
+    build_once,
     corpus_tag,
     load_table,
+    wipe_dir,
+    write_atomic,
 )
 from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
     TableLogConflictError,
@@ -40,6 +44,7 @@ from hadoop_based_distributed_batch_processing_system_spark.operators.scans impo
     _TLOG_UPDATE_BUMP,
     _TLOG_UPDATE_PRED,
     _tlog_apply_dml,
+    _tlog_apply_once,
     _tlog_build,
     _tlog_change_units,
     _tlog_commit_rebase,
@@ -52,6 +57,7 @@ from hadoop_based_distributed_batch_processing_system_spark.operators.scans impo
     _tlog_dv_frame,
     _tlog_live_stats,
     _tlog_relation,
+    _tlog_resume_or_wipe,
     _tlog_root,
     _tlog_staged_write_with_stats,
     _tlog_vacuumed,
@@ -317,77 +323,41 @@ _TLOG_WAP_SPEC = {"impl": 1, "pred": _TLOG_WAP_PRED, "branch": _TLOG_WAP_BRANCH}
 
 
 def _tlog_apply_wap(spark: SparkSession, sf_dir: str, root: str) -> None:
-    """Run the WAP lifecycle once per table dir (flock + stamp): a BAD
+    """Run the WAP lifecycle once per table dir: a BAD
     candidate (negated prices — violates the CHECK constraint) is
     staged and must FAIL its audit, leaving main byte-identical; then
     the GOOD slice stages, audits clean, and publishes as v3. Both
     sides of the gate are exercised on the table the registry reads."""
-    import fcntl
     import json
 
-    stamp_file = os.path.join(root, "_WAP")
-    stamp = json.dumps(_TLOG_WAP_SPEC, sort_keys=True)
-
-    def _ok() -> bool:
-        try:
-            return open(stamp_file).read() == stamp
-        except OSError:
-            return False
-
-    if _ok():
-        return
-    lock_fh = open(os.path.join(root, ".lock"), "w")
-    fcntl.flock(lock_fh, fcntl.LOCK_EX)
-    try:
-        if _ok():
-            return
+    def build() -> None:
+        slice_df = (
+            load_table(spark, sf_dir, "orders")
+            .filter(F.expr(_TLOG_WAP_PRED))
+            .select("o_orderkey", "o_totalprice")
+        )
+        # the bad candidate: constraint-violating prices
+        bad = _tlog_wap_stage(
+            slice_df.withColumn("o_totalprice", -F.col("o_totalprice")),
+            root,
+            "file_wap_bad",
+        )
+        bad_failures = _tlog_wap_audit(spark, root, bad)
+        if not bad_failures:
+            raise RuntimeError(
+                "WAP audit let a constraint-violating append through"
+            )
+        _tlog_wap_abort(root, bad)
         if _tlog_latest_version(root) != 2:
-            # mutations from a superseded spec on this root: wipe and
-            # rebuild the base (the DML recovery discipline). The
-            # build takes this same flock, so release around it.
-            import shutil
+            raise RuntimeError(
+                "WAP abort left main mutated — staging leaked into the log"
+            )
+        good = _tlog_wap_stage(slice_df, root, "file_wap_good")
+        _tlog_wap_publish(spark, root, good)
 
-            for entry in os.listdir(root):
-                if entry == ".lock":
-                    continue
-                p = os.path.join(root, entry)
-                shutil.rmtree(p) if os.path.isdir(p) else os.unlink(p)
-            fcntl.flock(lock_fh, fcntl.LOCK_UN)
-            _tlog_build(spark, sf_dir, root)
-            fcntl.flock(lock_fh, fcntl.LOCK_EX)
-            if _ok():
-                return
-        if _tlog_latest_version(root) == 2:
-            slice_df = (
-                load_table(spark, sf_dir, "orders")
-                .filter(F.expr(_TLOG_WAP_PRED))
-                .select("o_orderkey", "o_totalprice")
-            )
-            # the bad candidate: constraint-violating prices
-            bad = _tlog_wap_stage(
-                slice_df.withColumn("o_totalprice", -F.col("o_totalprice")),
-                root,
-                "file_wap_bad",
-            )
-            bad_failures = _tlog_wap_audit(spark, root, bad)
-            if not bad_failures:
-                raise RuntimeError(
-                    "WAP audit let a constraint-violating append through"
-                )
-            _tlog_wap_abort(root, bad)
-            if _tlog_latest_version(root) != 2:
-                raise RuntimeError(
-                    "WAP abort left main mutated — staging leaked into the log"
-                )
-            good = _tlog_wap_stage(slice_df, root, "file_wap_good")
-            _tlog_wap_publish(spark, root, good)
-        tmp = os.path.join(root, f"._WAP.{os.getpid()}.tmp")
-        with open(tmp, "w") as fh:
-            fh.write(stamp)
-        os.replace(tmp, stamp_file)
-    finally:
-        fcntl.flock(lock_fh, fcntl.LOCK_UN)
-        lock_fh.close()
+    _tlog_apply_once(
+        spark, sf_dir, root, "_WAP", json.dumps(_TLOG_WAP_SPEC, sort_keys=True), build
+    )
 
 
 @register(
@@ -944,47 +914,15 @@ _TLOG_TRG_SPEC = {
 
 
 def _tlog_apply_trigger(spark: SparkSession, sf_dir: str, root: str) -> None:
-    """Run the trigger lifecycle once per table dir (flock + stamp):
-    evaluate at 3 live groups (must SKIP — no commit), append a small
-    slice (4 groups), evaluate again (must FIRE — merge the two
-    smallest). Decision records persist beside the stamp for the
-    registry read."""
-    import fcntl
+    """Run the trigger lifecycle once per table dir: evaluate at 3 live
+    groups (must SKIP — no commit), append a small slice (4 groups),
+    evaluate again (must FIRE — merge the two smallest). Decision
+    records persist beside the stamp for the registry read."""
     import json
 
-    stamp_file = os.path.join(root, "_TRIGGER")
-    stamp = json.dumps(_TLOG_TRG_SPEC, sort_keys=True)
     decisions_file = os.path.join(root, "_TRIGGER_DECISIONS")
 
-    def _ok() -> bool:
-        try:
-            return (
-                open(stamp_file).read() == stamp
-                and os.path.exists(decisions_file)
-            )
-        except OSError:
-            return False
-
-    if _ok():
-        return
-    lock_fh = open(os.path.join(root, ".lock"), "w")
-    fcntl.flock(lock_fh, fcntl.LOCK_EX)
-    try:
-        if _ok():
-            return
-        if _tlog_latest_version(root) != 2:
-            import shutil
-
-            for entry in os.listdir(root):
-                if entry == ".lock":
-                    continue
-                p = os.path.join(root, entry)
-                shutil.rmtree(p) if os.path.isdir(p) else os.unlink(p)
-            fcntl.flock(lock_fh, fcntl.LOCK_UN)
-            _tlog_build(spark, sf_dir, root)
-            fcntl.flock(lock_fh, fcntl.LOCK_EX)
-            if _ok():
-                return
+    def build() -> None:
         decisions = []
         d1 = _tlog_compact_trigger(spark, root)
         if d1["fired"] or _tlog_latest_version(root) != 2:
@@ -1011,17 +949,12 @@ def _tlog_apply_trigger(spark: SparkSession, sf_dir: str, root: str) -> None:
         if not d2["fired"]:
             raise RuntimeError(f"trigger failed to fire at threshold: {d2}")
         decisions.append({"step": 2, **d2})
-        tmp = os.path.join(root, f"._TRGDEC.{os.getpid()}.tmp")
-        with open(tmp, "w") as fh:
-            json.dump(decisions, fh)
-        os.replace(tmp, decisions_file)
-        tmp = os.path.join(root, f"._TRIGGER.{os.getpid()}.tmp")
-        with open(tmp, "w") as fh:
-            fh.write(stamp)
-        os.replace(tmp, stamp_file)
-    finally:
-        fcntl.flock(lock_fh, fcntl.LOCK_UN)
-        lock_fh.close()
+        write_atomic(decisions_file, json.dumps(decisions))
+
+    _tlog_apply_once(
+        spark, sf_dir, root, "_TRIGGER", json.dumps(_TLOG_TRG_SPEC, sort_keys=True),
+        build, ready=lambda: os.path.exists(decisions_file),
+    )
 
 
 @register(
@@ -1142,45 +1075,21 @@ _TLOG_EV_SPEC = {
 def _tlog_ev_stage_source(spark: SparkSession, sf_dir: str) -> str:
     """Export the REAL events table as a multi-file parquet directory
     — the landing zone a file-stream ingest tails in production
-    (flock + stamp, hash-partitioned on event_id so every file's
-    content is deterministic)."""
-    import fcntl
+    (hash-partitioned on event_id so every file's content is
+    deterministic)."""
     import json
 
     src = _tlog_ev_src_dir(sf_dir)
-    stamp_file = os.path.join(src, "_STAGED")
-    stamp = json.dumps(_TLOG_EV_SPEC, sort_keys=True)
-
-    def _ok() -> bool:
-        try:
-            return open(stamp_file).read() == stamp
-        except OSError:
-            return False
-
-    if _ok():
-        return src
-    os.makedirs(src, exist_ok=True)
-    lock_fh = open(os.path.join(src, ".lock"), "w")
-    fcntl.flock(lock_fh, fcntl.LOCK_EX)
-    try:
-        if _ok():
-            return src
-        data = os.path.join(src, "data")
-        (
+    return build_once(
+        src, "_STAGED", json.dumps(_TLOG_EV_SPEC, sort_keys=True),
+        lambda: (
             load_table(spark, sf_dir, "events")
             .select("event_id", "ts", "event_type", "value")
             .repartition(_TLOG_EV_SRC_FILES, F.col("event_id"))
             .write.mode("overwrite")
-            .parquet(data)
-        )
-        tmp = os.path.join(src, f"._STAGED.{os.getpid()}.tmp")
-        with open(tmp, "w") as fh:
-            fh.write(stamp)
-        os.replace(tmp, stamp_file)
-    finally:
-        fcntl.flock(lock_fh, fcntl.LOCK_UN)
-        lock_fh.close()
-    return src
+            .parquet(os.path.join(src, "data"))
+        ),
+    )
 
 
 def _tlog_apply_ev_ingest(spark: SparkSession, sf_dir: str, root: str) -> None:
@@ -1192,53 +1101,17 @@ def _tlog_apply_ev_ingest(spark: SparkSession, sf_dir: str, root: str) -> None:
     engine's business — only the drained CONTENT is contracted — but
     the per-trigger cap guarantees a multi-batch history for the
     downstream incremental consumer."""
-    import fcntl
     import json
-    import shutil
 
     from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
         _tlog_batch_committed,
     )
 
-    stamp_file = os.path.join(root, "_INGESTED")
     spec = json.dumps(_TLOG_EV_SPEC, sort_keys=True)
 
-    def _ok() -> bool:
-        try:
-            return open(stamp_file).read() == spec
-        except OSError:
-            return False
-
-    if _ok():
-        return
-    src = _tlog_ev_stage_source(spark, sf_dir)
-    os.makedirs(root, exist_ok=True)
-    lock_fh = open(os.path.join(root, ".lock"), "w")
-    fcntl.flock(lock_fh, fcntl.LOCK_EX)
-    try:
-        if _ok():
-            return
-        spec_file = os.path.join(root, "_INGEST_SPEC")
-        stale = False
-        try:
-            stale = open(spec_file).read() != spec
-        except OSError:
-            stale = os.path.isdir(os.path.join(root, "_log")) and any(
-                f.endswith(".json")
-                for f in os.listdir(os.path.join(root, "_log"))
-            )
-        if stale:
-            for entry in os.listdir(root):
-                if entry == ".lock":
-                    continue
-                p = os.path.join(root, entry)
-                shutil.rmtree(p) if os.path.isdir(p) else os.unlink(p)
-        os.makedirs(os.path.join(root, "_log"), exist_ok=True)
-        if not os.path.exists(spec_file):
-            tmp = os.path.join(root, f"._SPEC.{os.getpid()}.tmp")
-            with open(tmp, "w") as fh:
-                fh.write(spec)
-            os.replace(tmp, spec_file)
+    def build() -> None:
+        src = _tlog_ev_stage_source(spark, sf_dir)
+        _tlog_resume_or_wipe(root, spec)
 
         def land(batch_df: DataFrame, batch_id: int) -> None:
             if batch_df.isEmpty():
@@ -1284,13 +1157,8 @@ def _tlog_apply_ev_ingest(spark: SparkSession, sf_dir: str, root: str) -> None:
                 f"events ingest landed {got} rows, source has {want} — "
                 "a batch was lost or double-applied"
             )
-        tmp = os.path.join(root, f"._INGESTED.{os.getpid()}.tmp")
-        with open(tmp, "w") as fh:
-            fh.write(spec)
-        os.replace(tmp, stamp_file)
-    finally:
-        fcntl.flock(lock_fh, fcntl.LOCK_UN)
-        lock_fh.close()
+
+    build_once(root, "_INGESTED", spec, build)
 
 
 @register(
@@ -1477,17 +1345,14 @@ def _tlog_apply_ev_rollup(
     spark: SparkSession, sf_dir: str, rollup_root: str, ev_root: str
 ) -> None:
     """Run the incremental consumer over every source commit once
-    (flock + stamp folding the source spec and its latest version):
+    (the stamp folds the source spec and its latest version):
     version-by-version, exactly the cadence a scheduled materialized-
     view refresh runs — each step reads ONLY that commit's change
     files. Crash-resumable: consumed versions are batch-keyed commits,
     so a resume applies only the missing ones."""
-    import fcntl
     import json
-    import shutil
 
     ev_latest = _tlog_latest_version(ev_root)
-    stamp_file = os.path.join(rollup_root, "_ROLLED")
     spec = json.dumps(
         {
             "impl": 1,
@@ -1498,50 +1363,12 @@ def _tlog_apply_ev_rollup(
         sort_keys=True,
     )
 
-    def _ok() -> bool:
-        try:
-            return open(stamp_file).read() == spec
-        except OSError:
-            return False
-
-    if _ok():
-        return
-    os.makedirs(rollup_root, exist_ok=True)
-    lock_fh = open(os.path.join(rollup_root, ".lock"), "w")
-    fcntl.flock(lock_fh, fcntl.LOCK_EX)
-    try:
-        if _ok():
-            return
-        spec_file = os.path.join(rollup_root, "_ROLLUP_SPEC")
-        stale = False
-        try:
-            stale = open(spec_file).read() != spec
-        except OSError:
-            stale = os.path.isdir(os.path.join(rollup_root, "_log")) and any(
-                f.endswith(".json")
-                for f in os.listdir(os.path.join(rollup_root, "_log"))
-            )
-        if stale:
-            for entry in os.listdir(rollup_root):
-                if entry == ".lock":
-                    continue
-                p = os.path.join(rollup_root, entry)
-                shutil.rmtree(p) if os.path.isdir(p) else os.unlink(p)
-        os.makedirs(os.path.join(rollup_root, "_log"), exist_ok=True)
-        if not os.path.exists(spec_file):
-            tmp = os.path.join(rollup_root, f"._SPEC.{os.getpid()}.tmp")
-            with open(tmp, "w") as fh:
-                fh.write(spec)
-            os.replace(tmp, spec_file)
+    def build() -> None:
+        _tlog_resume_or_wipe(rollup_root, spec, "_ROLLUP_SPEC")
         for v in range(ev_latest + 1):
             _tlog_rollup_consume(spark, rollup_root, ev_root, v)
-        tmp = os.path.join(rollup_root, f"._ROLLED.{os.getpid()}.tmp")
-        with open(tmp, "w") as fh:
-            fh.write(spec)
-        os.replace(tmp, stamp_file)
-    finally:
-        fcntl.flock(lock_fh, fcntl.LOCK_UN)
-        lock_fh.close()
+
+    build_once(rollup_root, "_ROLLED", spec, build)
 
 
 @register(
@@ -1678,41 +1505,19 @@ _TLOG_CLN_SPEC = {
 
 
 def _tlog_apply_clone(spark: SparkSession, sf_dir: str, root: str) -> None:
-    """Run the clone lifecycle once per dir (flock + stamp): v0 clones
+    """Run the clone lifecycle once per dir: v0 clones
     the shared base table's head (3 borrowed groups), v1 appends a
     LOCAL group, v2 binds a LOCAL deletion vector to a BORROWED file —
     the clone diverges in both directions without the source changing
     by a byte (asserted)."""
-    import fcntl
     import json
-    import shutil
 
-    stamp_file = os.path.join(root, "_CLONED")
-    stamp = json.dumps(_TLOG_CLN_SPEC, sort_keys=True)
-
-    def _ok() -> bool:
-        try:
-            return open(stamp_file).read() == stamp
-        except OSError:
-            return False
-
-    if _ok():
-        return
-    src_root = _tlog_build(spark, sf_dir, _tlog_root(sf_dir))
-    src_latest = _tlog_latest_version(src_root)
-    os.makedirs(root, exist_ok=True)
-    lock_fh = open(os.path.join(root, ".lock"), "w")
-    fcntl.flock(lock_fh, fcntl.LOCK_EX)
-    try:
-        if _ok():
-            return
+    def build() -> None:
+        src_root = _tlog_build(spark, sf_dir, _tlog_root(sf_dir))
+        src_latest = _tlog_latest_version(src_root)
         if os.path.isdir(os.path.join(root, "_log")):
             # stamped-stale or unknown-provenance dir: rebuild
-            for entry in os.listdir(root):
-                if entry == ".lock":
-                    continue
-                p = os.path.join(root, entry)
-                shutil.rmtree(p) if os.path.isdir(p) else os.unlink(p)
+            wipe_dir(root)
         _tlog_clone_shallow(src_root, root, src_latest)
         slice_df = (
             load_table(spark, sf_dir, "orders")
@@ -1750,13 +1555,8 @@ def _tlog_apply_clone(spark: SparkSession, sf_dir: str, root: str) -> None:
             raise RuntimeError(
                 "clone lifecycle mutated the SOURCE log — isolation broken"
             )
-        tmp = os.path.join(root, f"._CLONED.{os.getpid()}.tmp")
-        with open(tmp, "w") as fh:
-            fh.write(stamp)
-        os.replace(tmp, stamp_file)
-    finally:
-        fcntl.flock(lock_fh, fcntl.LOCK_UN)
-        lock_fh.close()
+
+    build_once(root, "_CLONED", json.dumps(_TLOG_CLN_SPEC, sort_keys=True), build)
 
 
 @register(
@@ -1860,29 +1660,15 @@ def _tlog_apply_ev_cluster(spark: SparkSession, sf_dir: str, root: str) -> None:
     ``dataChange: false`` — live content is identical, so change-feed
     consumers (the rollup, the stream feeds) skip it instead of
     netting a table-sized add/remove pair to zero (Delta's OPTIMIZE
-    flag). Flock + stamp idempotent."""
-    import fcntl
+    flag)."""
     import json
 
-    stamp_file = os.path.join(root, "_CLUSTERED")
     stamp = json.dumps(
         {"impl": 1, "weeks": _TLOG_EV_WEEKS, "src": _TLOG_EV_SPEC},
         sort_keys=True,
     )
 
-    def _ok() -> bool:
-        try:
-            return open(stamp_file).read() == stamp
-        except OSError:
-            return False
-
-    if _ok():
-        return
-    lock_fh = open(os.path.join(root, ".lock"), "w")
-    fcntl.flock(lock_fh, fcntl.LOCK_EX)
-    try:
-        if _ok():
-            return
+    def build() -> None:
         base = _tlog_latest_version(root)
         live = [
             os.path.basename(p) for p in _tlog_live_files(root, base)
@@ -1911,13 +1697,8 @@ def _tlog_apply_ev_cluster(spark: SparkSession, sf_dir: str, root: str) -> None:
             stats=stats,
             data_change=False,
         )
-        tmp = os.path.join(root, f"._CLUSTERED.{os.getpid()}.tmp")
-        with open(tmp, "w") as fh:
-            fh.write(stamp)
-        os.replace(tmp, stamp_file)
-    finally:
-        fcntl.flock(lock_fh, fcntl.LOCK_UN)
-        lock_fh.close()
+
+    build_once(root, "_CLUSTERED", stamp, build)
 
 
 def _tlog_ts_prune(
@@ -2091,46 +1872,19 @@ _TLOG_CHK_SPEC = {
 
 
 def _tlog_apply_chk(spark: SparkSession, sf_dir: str, root: str) -> None:
-    """Run the constraint lifecycle once per dir (flock + stamp):
+    """Run the constraint lifecycle once per dir:
     v3 ADDs the CHECK (existing data validated); an unsatisfiable
     constraint and a violating append are both REJECTED (asserted);
     v4 is a clean append through the enforcing write path."""
-    import fcntl
     import json
 
     from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
         _tlog_live_constraints,
     )
 
-    stamp_file = os.path.join(root, "_CHK")
     stamp = json.dumps(_TLOG_CHK_SPEC, sort_keys=True)
 
-    def _ok() -> bool:
-        try:
-            return open(stamp_file).read() == stamp
-        except OSError:
-            return False
-
-    if _ok():
-        return
-    lock_fh = open(os.path.join(root, ".lock"), "w")
-    fcntl.flock(lock_fh, fcntl.LOCK_EX)
-    try:
-        if _ok():
-            return
-        if _tlog_latest_version(root) != 2:
-            import shutil
-
-            for entry in os.listdir(root):
-                if entry == ".lock":
-                    continue
-                p = os.path.join(root, entry)
-                shutil.rmtree(p) if os.path.isdir(p) else os.unlink(p)
-            fcntl.flock(lock_fh, fcntl.LOCK_UN)
-            _tlog_build(spark, sf_dir, root)
-            fcntl.flock(lock_fh, fcntl.LOCK_EX)
-            if _ok():
-                return
+    def build() -> None:
         if _tlog_latest_version(root) == 2:
             # a constraint the data already violates must be rejected
             try:
@@ -2175,13 +1929,8 @@ def _tlog_apply_chk(spark: SparkSession, sf_dir: str, root: str) -> None:
                 root, add=promoted, remove=[], base_version=3,
                 read_set=set(), stats=stats,
             )
-        tmp = os.path.join(root, f"._CHK.{os.getpid()}.tmp")
-        with open(tmp, "w") as fh:
-            fh.write(stamp)
-        os.replace(tmp, stamp_file)
-    finally:
-        fcntl.flock(lock_fh, fcntl.LOCK_UN)
-        lock_fh.close()
+
+    _tlog_apply_once(spark, sf_dir, root, "_CHK", stamp, build)
 
 
 @register(
@@ -2251,7 +2000,7 @@ _TLOG_RID_SPEC = {
 
 
 def _tlog_apply_rid(spark: SparkSession, sf_dir: str, root: str) -> None:
-    """Build the ROW-TRACKED table once per dir (flock + stamp): the
+    """Build the ROW-TRACKED table once per dir: the
     base history mirrors the shared table's three commits, but every
     row carries ``_rid`` — a stable row id MINTED AT INSERT (here a
     deterministic hash of the insert-time key, per the repo's
@@ -2260,9 +2009,7 @@ def _tlog_apply_rid(spark: SparkSession, sf_dir: str, root: str) -> None:
     of file_A (re-key + price bump) that CARRIES ``_rid`` through the
     rewrite. Carrying the id is the entire feature: it is what lets
     downstream consumers recognize the re-keyed row as the same row."""
-    import fcntl
     import json
-    import shutil
 
     from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
         _TLOG_COMMITS,
@@ -2270,28 +2017,10 @@ def _tlog_apply_rid(spark: SparkSession, sf_dir: str, root: str) -> None:
         _tlog_commit,
     )
 
-    stamp_file = os.path.join(root, "_RID")
     stamp = json.dumps(_TLOG_RID_SPEC, sort_keys=True)
 
-    def _ok() -> bool:
-        try:
-            return open(stamp_file).read() == stamp
-        except OSError:
-            return False
-
-    if _ok():
-        return
-    os.makedirs(root, exist_ok=True)
-    lock_fh = open(os.path.join(root, ".lock"), "w")
-    fcntl.flock(lock_fh, fcntl.LOCK_EX)
-    try:
-        if _ok():
-            return
-        for entry in os.listdir(root):
-            if entry == ".lock":
-                continue
-            p = os.path.join(root, entry)
-            shutil.rmtree(p) if os.path.isdir(p) else os.unlink(p)
+    def build() -> None:
+        wipe_dir(root)
         os.makedirs(os.path.join(root, "_log"))
         rows = load_table(spark, sf_dir, "orders").select(
             "o_orderkey",
@@ -2334,13 +2063,8 @@ def _tlog_apply_rid(spark: SparkSession, sf_dir: str, root: str) -> None:
             root, add=promoted, remove=["file_A"], base_version=2,
             read_set={"file_A"}, stats=stats or None,
         )
-        tmp = os.path.join(root, f"._RID.{os.getpid()}.tmp")
-        with open(tmp, "w") as fh:
-            fh.write(stamp)
-        os.replace(tmp, stamp_file)
-    finally:
-        fcntl.flock(lock_fh, fcntl.LOCK_UN)
-        lock_fh.close()
+
+    build_once(root, "_RID", stamp, build)
 
 
 def _tlog_cdc_images_by(
@@ -2537,43 +2261,22 @@ def _tlog_pev_write_under_spec(
 
 
 def _tlog_apply_pev(spark: SparkSession, sf_dir: str, root: str) -> None:
-    """Run the partition-evolution lifecycle once per dir (flock +
-    stamp): v0 declares spec 0 = day(ts) and lands days 1-8 as day
-    files; v1 appends days 9-16 under the same spec; v2 EVOLVES the
-    spec to week(ts) — metadata only, not one data byte moves; v3
-    appends days 17+ as week files. The table ends with BOTH layouts
-    live at once."""
-    import fcntl
+    """Run the partition-evolution lifecycle once per dir: v0 declares
+    spec 0 = day(ts) and lands days 1-8 as day files; v1 appends days
+    9-16 under the same spec; v2 EVOLVES the spec to week(ts) —
+    metadata only, not one data byte moves; v3 appends days 17+ as
+    week files. The table ends with BOTH layouts live at once."""
     import json
-    import shutil
 
     from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
         _tlog_commit,
         _tlog_live_partitioning,
     )
 
-    stamp_file = os.path.join(root, "_PEV")
     stamp = json.dumps(_TLOG_PEV_SPEC, sort_keys=True)
 
-    def _ok() -> bool:
-        try:
-            return open(stamp_file).read() == stamp
-        except OSError:
-            return False
-
-    if _ok():
-        return
-    os.makedirs(root, exist_ok=True)
-    lock_fh = open(os.path.join(root, ".lock"), "w")
-    fcntl.flock(lock_fh, fcntl.LOCK_EX)
-    try:
-        if _ok():
-            return
-        for entry in os.listdir(root):
-            if entry == ".lock":
-                continue
-            p = os.path.join(root, entry)
-            shutil.rmtree(p) if os.path.isdir(p) else os.unlink(p)
+    def build() -> None:
+        wipe_dir(root)
         os.makedirs(os.path.join(root, "_log"))
         events = load_table(spark, sf_dir, "events").select(
             "event_id", "ts", "event_type", "value"
@@ -2608,13 +2311,8 @@ def _tlog_apply_pev(spark: SparkSession, sf_dir: str, root: str) -> None:
             raise RuntimeError("spec change did not replay")
         # v3: append the rest under the NEW spec (week files)
         _tlog_pev_write_under_spec(spark, root, events.filter(day >= 17), 2)
-        tmp = os.path.join(root, f"._PEV.{os.getpid()}.tmp")
-        with open(tmp, "w") as fh:
-            fh.write(stamp)
-        os.replace(tmp, stamp_file)
-    finally:
-        fcntl.flock(lock_fh, fcntl.LOCK_UN)
-        lock_fh.close()
+
+    build_once(root, "_PEV", stamp, build)
 
 
 @register(
@@ -2695,18 +2393,15 @@ _TLOG_PCM_SPEC = {"impl": 1, "q": [_TLOG_PCM_LO, _TLOG_PCM_HI]}
 
 
 def _tlog_apply_pcm(spark: SparkSession, sf_dir: str, root: str) -> None:
-    """Run the two-axis metadata lifecycle once per dir (flock +
-    stamp): the events table BORN MAPPED under spec 0 = day(ts);
-    v0 lands days 1-8 as day files (original spellings bound);
-    v1 appends days 9-16; v2 RENAMES ts -> event_ts (mapping axis,
-    pure metadata); v3 EVOLVES the spec to week(ts) (layout axis,
-    pure metadata); v4 lands days 17+ as WEEK files written
-    physically under the NEW spelling — the table ends with both
-    layouts AND both spellings live at once, the state a long-lived
-    production table actually reaches."""
-    import fcntl
+    """Run the two-axis metadata lifecycle once per dir: the events table
+    BORN MAPPED under spec 0 = day(ts); v0 lands days 1-8 as day files
+    (original spellings bound); v1 appends days 9-16; v2 RENAMES ts ->
+    event_ts (mapping axis, pure metadata); v3 EVOLVES the spec to
+    week(ts) (layout axis, pure metadata); v4 lands days 17+ as WEEK
+    files written physically under the NEW spelling — the table ends
+    with both layouts AND both spellings live at once, the state a
+    long-lived production table actually reaches."""
     import json
-    import shutil
 
     from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
         _tlog_commit,
@@ -2714,28 +2409,10 @@ def _tlog_apply_pcm(spark: SparkSession, sf_dir: str, root: str) -> None:
         _tlog_live_partitioning,
     )
 
-    stamp_file = os.path.join(root, "_PCM")
     stamp = json.dumps(_TLOG_PCM_SPEC, sort_keys=True)
 
-    def _ok() -> bool:
-        try:
-            return open(stamp_file).read() == stamp
-        except OSError:
-            return False
-
-    if _ok():
-        return
-    os.makedirs(root, exist_ok=True)
-    lock_fh = open(os.path.join(root, ".lock"), "w")
-    fcntl.flock(lock_fh, fcntl.LOCK_EX)
-    try:
-        if _ok():
-            return
-        for entry in os.listdir(root):
-            if entry == ".lock":
-                continue
-            p = os.path.join(root, entry)
-            shutil.rmtree(p) if os.path.isdir(p) else os.unlink(p)
+    def build() -> None:
+        wipe_dir(root)
         os.makedirs(os.path.join(root, "_log"))
         events = load_table(spark, sf_dir, "events").select(
             "event_id", "ts", "event_type", "value"
@@ -2830,13 +2507,8 @@ def _tlog_apply_pcm(spark: SparkSession, sf_dir: str, root: str) -> None:
             root, add=promoted, remove=[], base_version=3, stats=stats,
             colphys={g: new_binding for g in promoted},
         )
-        tmp = os.path.join(root, f"._PCM.{os.getpid()}.tmp")
-        with open(tmp, "w") as fh:
-            fh.write(stamp)
-        os.replace(tmp, stamp_file)
-    finally:
-        fcntl.flock(lock_fh, fcntl.LOCK_UN)
-        lock_fh.close()
+
+    build_once(root, "_PCM", stamp, build)
 
 
 @register(
@@ -3100,39 +2772,20 @@ _TLOG_TXN_SPEC = {
 
 
 def _tlog_apply_txn(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
-    """Run the transaction lifecycle once (flock + stamp on the
+    """Run the transaction lifecycle once (stamped on the
     coordinator root): txn 1 stages appends on BOTH tables and
     commits all-or-nothing (both land); txn 2 stages a VALID append
     on A and a constraint-violating one on B — the whole transaction
     aborts and NEITHER table changes (A's staged branch is dropped
     despite auditing clean)."""
-    import fcntl
     import json
     import shutil
 
     root_a, root_b, coord = _tlog_txn_roots(sf_dir)
-    stamp_file = os.path.join(coord, "_TXN")
     stamp = json.dumps(_TLOG_TXN_SPEC, sort_keys=True)
 
-    def _ok() -> bool:
-        try:
-            return open(stamp_file).read() == stamp
-        except OSError:
-            return False
-
-    if _ok():
-        return root_a, root_b
-    os.makedirs(coord, exist_ok=True)
-    lock_fh = open(os.path.join(coord, ".lock"), "w")
-    fcntl.flock(lock_fh, fcntl.LOCK_EX)
-    try:
-        if _ok():
-            return root_a, root_b
-        for entry in os.listdir(coord):
-            if entry == ".lock":
-                continue
-            p = os.path.join(coord, entry)
-            shutil.rmtree(p) if os.path.isdir(p) else os.unlink(p)
+    def build() -> None:
+        wipe_dir(coord)
         for r in (root_a, root_b):
             if os.path.isdir(r) and _tlog_latest_version_safe(r) != 2:
                 shutil.rmtree(r)
@@ -3191,13 +2844,8 @@ def _tlog_apply_txn(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
         for r, group in ((root_a, "file_txn2_a"), (root_b, "file_txn2_b")):
             if os.path.exists(os.path.join(r, group)):
                 raise RuntimeError(f"aborted leg left data: {r}/{group}")
-        tmp = os.path.join(coord, f"._TXN.{os.getpid()}.tmp")
-        with open(tmp, "w") as fh:
-            fh.write(stamp)
-        os.replace(tmp, stamp_file)
-    finally:
-        fcntl.flock(lock_fh, fcntl.LOCK_UN)
-        lock_fh.close()
+
+    build_once(coord, "_TXN", stamp, build)
     return root_a, root_b
 
 
@@ -3288,48 +2936,29 @@ _TLOG_SEV_SCHEMA_V2 = _TLOG_SEV_SCHEMA_V1 + ", quality double"
 
 
 def _tlog_apply_sev(spark: SparkSession, sf_dir: str) -> str:
-    """Run the mid-stream schema-widening lifecycle once (flock +
-    stamp): phase 1 drains the even-keyed half of events through the
-    file stream under the ORIGINAL 4-column schema; then the landing
-    zone starts receiving 5-column files (a new ``quality`` field)
-    and the stream RESTARTS with the WIDENED declared schema against
-    the SAME checkpoint — it resumes at its recorded offset and
-    processes only the new files (pinned). Batch commits land each
-    phase's groups under their own physical schema; the table's
-    manifest stats make the difference self-describing (phase-1
-    groups simply record no ``quality`` bounds)."""
-    import fcntl
+    """Run the mid-stream schema-widening lifecycle once: phase 1 drains
+    the even-keyed half of events through the file stream under the
+    ORIGINAL 4-column schema; then the landing zone starts receiving
+    5-column files (a new ``quality`` field) and the stream RESTARTS
+    with the WIDENED declared schema against the SAME checkpoint — it
+    resumes at its recorded offset and processes only the new files
+    (pinned). Batch commits land each phase's groups under their own
+    physical schema; the table's manifest stats make the difference
+    self-describing (phase-1 groups simply record no ``quality``
+    bounds)."""
     import json
-    import shutil
 
     from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
         _tlog_batch_committed,
     )
 
     src, root = _tlog_sev_dirs(sf_dir)
-    stamp_file = os.path.join(root, "_SEV")
     stamp = json.dumps(_TLOG_SEV_SPEC, sort_keys=True)
 
-    def _ok() -> bool:
-        try:
-            return open(stamp_file).read() == stamp
-        except OSError:
-            return False
-
-    if _ok():
-        return root
-    os.makedirs(root, exist_ok=True)
-    lock_fh = open(os.path.join(root, ".lock"), "w")
-    fcntl.flock(lock_fh, fcntl.LOCK_EX)
-    try:
-        if _ok():
-            return root
+    def build() -> None:
         for d in (root, src):
-            for entry in os.listdir(d) if os.path.isdir(d) else []:
-                if entry == ".lock":
-                    continue
-                p = os.path.join(d, entry)
-                shutil.rmtree(p) if os.path.isdir(p) else os.unlink(p)
+            if os.path.isdir(d):
+                wipe_dir(d)
         os.makedirs(os.path.join(root, "_log"), exist_ok=True)
         events = load_table(spark, sf_dir, "events").select(
             "event_id", "ts", "event_type", "value"
@@ -3398,14 +3027,8 @@ def _tlog_apply_sev(spark: SparkSession, sf_dir: str) -> str:
                 f"schema-evolving ingest landed {got} rows, source has "
                 f"{want} — a batch was lost, double-applied, or re-read"
             )
-        tmp = os.path.join(root, f"._SEV.{os.getpid()}.tmp")
-        with open(tmp, "w") as fh:
-            fh.write(stamp)
-        os.replace(tmp, stamp_file)
-    finally:
-        fcntl.flock(lock_fh, fcntl.LOCK_UN)
-        lock_fh.close()
-    return root
+
+    return build_once(root, "_SEV", stamp, build)
 
 
 @register(
@@ -3874,40 +3497,21 @@ _TLOG_CTX_SPEC = {
 
 
 def _tlog_apply_ctx(spark: SparkSession, sf_dir: str) -> tuple[str, str, str]:
-    """Run the catalog-txn lifecycle once (flock + stamp on the
+    """Run the catalog-txn lifecycle once (stamped on the
     catalog root): catalog v0 pins both tables at their build heads;
     the transaction stages AND PUBLISHES appends on both logs (table
     heads move — but catalog readers still resolve the old pins:
     published-yet-invisible, the catalog's WAP gap); ONE catalog swap
     commit then flips both pins together. Mid-swap invisibility and
     the never-mixed property are pytest-pinned."""
-    import fcntl
     import json
     import shutil
 
     root_a, root_b, cat = _tlog_ctx_roots(sf_dir)
-    stamp_file = os.path.join(cat, "_CTX")
     stamp = json.dumps(_TLOG_CTX_SPEC, sort_keys=True)
 
-    def _ok() -> bool:
-        try:
-            return open(stamp_file).read() == stamp
-        except OSError:
-            return False
-
-    if _ok():
-        return root_a, root_b, cat
-    os.makedirs(cat, exist_ok=True)
-    lock_fh = open(os.path.join(cat, ".lock"), "w")
-    fcntl.flock(lock_fh, fcntl.LOCK_EX)
-    try:
-        if _ok():
-            return root_a, root_b, cat
-        for entry in os.listdir(cat):
-            if entry == ".lock":
-                continue
-            p = os.path.join(cat, entry)
-            shutil.rmtree(p) if os.path.isdir(p) else os.unlink(p)
+    def build() -> None:
+        wipe_dir(cat)
         for r in (root_a, root_b):
             if os.path.isdir(r) and _tlog_latest_version_safe(r) != 2:
                 shutil.rmtree(r)
@@ -3945,13 +3549,8 @@ def _tlog_apply_ctx(spark: SparkSession, sf_dir: str) -> tuple[str, str, str]:
         ]
         path = _tlog_catalog_txn_prepare(cat, "ctx1", cat, 0, legs)
         _tlog_catalog_txn_commit(spark, path)
-        tmp = os.path.join(cat, f"._CTX.{os.getpid()}.tmp")
-        with open(tmp, "w") as fh:
-            fh.write(stamp)
-        os.replace(tmp, stamp_file)
-    finally:
-        fcntl.flock(lock_fh, fcntl.LOCK_UN)
-        lock_fh.close()
+
+    build_once(cat, "_CTX", stamp, build)
     return root_a, root_b, cat
 
 
@@ -4250,7 +3849,7 @@ _TLOG_CCR_SPEC = {"impl": 1}
 
 
 def _tlog_apply_ccr(spark: SparkSession, sf_dir: str) -> tuple[dict, str]:
-    """Replicate the catalog-txn WAREHOUSE once (flock + stamp on the
+    """Replicate the catalog-txn WAREHOUSE once (stamped on the
     downstream catalog root): bootstrap each replica table from the
     upstream catalog v0's PINNED snapshot and pin them in a DOWNSTREAM
     catalog v0; then drain the upstream catalog feed — each micro-
@@ -4259,9 +3858,7 @@ def _tlog_apply_ccr(spark: SparkSession, sf_dir: str) -> tuple[dict, str]:
     the downstream preserves the upstream's visibility atomicity:
     a reader of the downstream catalog sees each upstream transaction
     whole or not at all, one swap per swap."""
-    import fcntl
     import json
-    import shutil
 
     from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
         _tlog_commit,
@@ -4273,29 +3870,12 @@ def _tlog_apply_ccr(spark: SparkSession, sf_dir: str) -> tuple[dict, str]:
     _ra, _rb, src_cat = _tlog_apply_ctx(spark, sf_dir)
     dst_a, dst_b, dst_cat = _tlog_ccr_roots(sf_dir)
     dst_roots = {"a": dst_a, "b": dst_b}
-    stamp_file = os.path.join(dst_cat, "_CCR")
     stamp = json.dumps(_TLOG_CCR_SPEC, sort_keys=True)
 
-    def _ok() -> bool:
-        try:
-            return open(stamp_file).read() == stamp
-        except OSError:
-            return False
-
-    if _ok():
-        return dst_roots, dst_cat
-    os.makedirs(dst_cat, exist_ok=True)
-    lock_fh = open(os.path.join(dst_cat, ".lock"), "w")
-    fcntl.flock(lock_fh, fcntl.LOCK_EX)
-    try:
-        if _ok():
-            return dst_roots, dst_cat
+    def build() -> None:
         for d in (dst_cat, dst_a, dst_b):
-            for entry in os.listdir(d) if os.path.isdir(d) else []:
-                if entry == ".lock":
-                    continue
-                p = os.path.join(d, entry)
-                shutil.rmtree(p) if os.path.isdir(p) else os.unlink(p)
+            if os.path.isdir(d):
+                wipe_dir(d)
         # bootstrap: each replica = the upstream catalog v0's PINNED
         # snapshot (not the table head — published-yet-unswapped work
         # must not leak into the replica's base)
@@ -4415,13 +3995,8 @@ def _tlog_apply_ccr(spark: SparkSession, sf_dir: str) -> tuple[dict, str]:
                 f"{_tlog_catalog_latest(dst_cat)} swaps vs upstream "
                 f"{_tlog_catalog_latest(src_cat)}"
             )
-        tmp = os.path.join(dst_cat, f"._CCR.{os.getpid()}.tmp")
-        with open(tmp, "w") as fh:
-            fh.write(stamp)
-        os.replace(tmp, stamp_file)
-    finally:
-        fcntl.flock(lock_fh, fcntl.LOCK_UN)
-        lock_fh.close()
+
+    build_once(dst_cat, "_CCR", stamp, build)
     return dst_roots, dst_cat
 
 
@@ -4564,13 +4139,12 @@ _TLOG_VCF_SPEC = {"impl": 1, "pred": _TLOG_VCF_PRED}
 
 
 def _tlog_apply_vcf(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
-    """Run the pinned-vacuum lifecycle once (flock + stamp on the
+    """Run the pinned-vacuum lifecycle once (stamped on the
     table root): build (head v2) → catalog pins v2 → compaction
     rewrite (v3 — the base groups go DEAD at head but stay PINNED) →
     append (v4) → FLOORED vacuum at retain=head, which clamps to the
     pin and reclaims NOTHING (the base groups are the pinned
     snapshot's live set)."""
-    import fcntl
     import json
     import shutil
 
@@ -4579,35 +4153,14 @@ def _tlog_apply_vcf(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     )
 
     root, cat = _tlog_vcf_roots(sf_dir)
-    stamp_file = os.path.join(root, "_VCF")
     stamp = json.dumps(_TLOG_VCF_SPEC, sort_keys=True)
 
-    def _ok() -> bool:
-        try:
-            return open(stamp_file).read() == stamp
-        except OSError:
-            return False
-
-    if _ok():
-        return root, cat
-    _tlog_build(spark, sf_dir, root)  # own flock; take ours after
-    lock_fh = open(os.path.join(root, ".lock"), "w")
-    fcntl.flock(lock_fh, fcntl.LOCK_EX)
-    try:
-        if _ok():
-            return root, cat
+    def build() -> None:
+        _tlog_build(spark, sf_dir, root)
         if _tlog_latest_version_safe(root) != 2 or os.path.isdir(cat):
             shutil.rmtree(cat, ignore_errors=True)
-            for entry in os.listdir(root):
-                if entry == ".lock":
-                    continue
-                p = os.path.join(root, entry)
-                shutil.rmtree(p) if os.path.isdir(p) else os.unlink(p)
-            fcntl.flock(lock_fh, fcntl.LOCK_UN)
+            wipe_dir(root)
             _tlog_build(spark, sf_dir, root)
-            fcntl.flock(lock_fh, fcntl.LOCK_EX)
-            if _ok():
-                return root, cat
         _tlog_catalog_commit(
             cat, {"t": {"root": root, "version": 2}}, base=-1
         )
@@ -4649,13 +4202,8 @@ def _tlog_apply_vcf(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
                 f"floored vacuum drifted: horizon {effective}, "
                 f"deleted {deleted} — the catalog pin must clamp both"
             )
-        tmp = os.path.join(root, f"._VCF.{os.getpid()}.tmp")
-        with open(tmp, "w") as fh:
-            fh.write(stamp)
-        os.replace(tmp, stamp_file)
-    finally:
-        fcntl.flock(lock_fh, fcntl.LOCK_UN)
-        lock_fh.close()
+
+    build_once(root, "_VCF", stamp, build)
     return root, cat
 
 
@@ -4740,43 +4288,23 @@ _TLOG_CMA_SPEC = {"impl": 1, "pins": 3}
 
 def _tlog_apply_cma(spark: SparkSession, sf_dir: str) -> tuple[str, str, str]:
     """Build the catalog history the routed multi-asof resolves
-    through (flock + stamp on the catalog root): three catalog
+    through (stamped on the catalog root): three catalog
     versions pinning the shared base/dml tables at the same coherent
     moments the shared-clock operator reads — v0 mid-history (both
     tables at their v1), v1 after the DML table's DELETE (base v2,
     dml v3 — the skewed-version case), v2 after its UPDATE (dml v4).
     The tables themselves are the shared read-only builds; only the
     catalog lives on this root."""
-    import fcntl
     import json
-    import shutil
 
     base_root = _tlog_build(spark, sf_dir, _tlog_root(sf_dir))
     dml_root = _tlog_build(spark, sf_dir, _tlog_dml_root(sf_dir))
     _tlog_apply_dml(spark, sf_dir, dml_root)
     cat = _tlog_cma_root(sf_dir)
-    stamp_file = os.path.join(cat, "_CMA")
     stamp = json.dumps(_TLOG_CMA_SPEC, sort_keys=True)
 
-    def _ok() -> bool:
-        try:
-            return open(stamp_file).read() == stamp
-        except OSError:
-            return False
-
-    if _ok():
-        return base_root, dml_root, cat
-    os.makedirs(cat, exist_ok=True)
-    lock_fh = open(os.path.join(cat, ".lock"), "w")
-    fcntl.flock(lock_fh, fcntl.LOCK_EX)
-    try:
-        if _ok():
-            return base_root, dml_root, cat
-        for entry in os.listdir(cat):
-            if entry == ".lock":
-                continue
-            p = os.path.join(cat, entry)
-            shutil.rmtree(p) if os.path.isdir(p) else os.unlink(p)
+    def build() -> None:
+        wipe_dir(cat)
         pins = [
             {"base": 1, "dml": 1},  # mid-history
             {"base": 2, "dml": 3},  # after the DELETE (skewed versions)
@@ -4791,13 +4319,8 @@ def _tlog_apply_cma(spark: SparkSession, sf_dir: str) -> tuple[str, str, str]:
                 },
                 base=i - 1,
             )
-        tmp = os.path.join(cat, f"._CMA.{os.getpid()}.tmp")
-        with open(tmp, "w") as fh:
-            fh.write(stamp)
-        os.replace(tmp, stamp_file)
-    finally:
-        fcntl.flock(lock_fh, fcntl.LOCK_UN)
-        lock_fh.close()
+
+    build_once(cat, "_CMA", stamp, build)
     return base_root, dml_root, cat
 
 
@@ -4988,14 +4511,13 @@ _TLOG_CDEEP_SPEC = {
 
 
 def _tlog_apply_cdeep(spark: SparkSession, sf_dir: str, root: str) -> None:
-    """Run the deepen lifecycle once per dir (flock + stamp): clone a
+    """Run the deepen lifecycle once per dir: clone a
     PRIVATE source's head, diverge (local append + local DV on
     borrowed file_D), DEEPEN while the source still retains every
     borrowed byte — then the source retires file_D in a rewrite and
     VACUUMS it. The shallow clone would now be broken (the exact
     hazard ``_tlog_clone_live_files`` detects); the deepened clone
     reads on, byte-complete, from its own root."""
-    import fcntl
     import json
     import shutil
 
@@ -5004,35 +4526,18 @@ def _tlog_apply_cdeep(spark: SparkSession, sf_dir: str, root: str) -> None:
         _tlog_vacuum,
     )
 
-    stamp_file = os.path.join(root, "_CDEEP")
     stamp = json.dumps(_TLOG_CDEEP_SPEC, sort_keys=True)
 
-    def _ok() -> bool:
-        try:
-            return open(stamp_file).read() == stamp
-        except OSError:
-            return False
-
-    if _ok():
-        return
     src_root = _tlog_cdeep_src_root(sf_dir)
-    os.makedirs(root, exist_ok=True)
-    lock_fh = open(os.path.join(root, ".lock"), "w")
-    fcntl.flock(lock_fh, fcntl.LOCK_EX)
-    try:
-        if _ok():
-            return
+
+    def build() -> None:
         # the source is retired-and-vacuumed by this lifecycle, so an
         # unstamped run rebuilds BOTH sides from scratch (serialized
         # by the clone lock — the source is private to this lifecycle)
         shutil.rmtree(src_root, ignore_errors=True)
         _tlog_build(spark, sf_dir, src_root)
         if os.path.isdir(os.path.join(root, "_log")):
-            for entry in os.listdir(root):
-                if entry == ".lock":
-                    continue
-                p = os.path.join(root, entry)
-                shutil.rmtree(p) if os.path.isdir(p) else os.unlink(p)
+            wipe_dir(root)
         _tlog_clone_shallow(src_root, root, 2)
         # v1: local append
         slice_df = (
@@ -5083,13 +4588,8 @@ def _tlog_apply_cdeep(spark: SparkSession, sf_dir: str, root: str) -> None:
                 f"lifecycle expected the source vacuum to delete file_D, "
                 f"got {deleted}"
             )
-        tmp = os.path.join(root, f"._CDEEP.{os.getpid()}.tmp")
-        with open(tmp, "w") as fh:
-            fh.write(stamp)
-        os.replace(tmp, stamp_file)
-    finally:
-        fcntl.flock(lock_fh, fcntl.LOCK_UN)
-        lock_fh.close()
+
+    build_once(root, "_CDEEP", stamp, build)
 
 
 @register(
@@ -5281,7 +4781,7 @@ _TLOG_CMAP_SPEC = {"impl": 1, "pred": _TLOG_CMAP_PRED}
 
 
 def _tlog_apply_cmap(spark: SparkSession, sf_dir: str, root: str) -> None:
-    """Run the column-mapping lifecycle once per dir (flock + stamp)
+    """Run the column-mapping lifecycle once per dir
     on top of the standard 3-commit base table:
     v3 ENABLES mapping — assigns field ids 1/2 to the existing
     physical columns and binds every base group (pure metadata);
@@ -5292,46 +4792,16 @@ def _tlog_apply_cmap(spark: SparkSession, sf_dir: str, root: str) -> None:
     renamed production table lives in;
     v6 DROPS ``channel`` (pure metadata — field 3 leaves the logical
     schema; file_F keeps the bytes, unreachable)."""
-    import fcntl
     import json
-    import shutil
 
     from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
         _tlog_commit,
         _tlog_live_colmap,
     )
 
-    stamp_file = os.path.join(root, "_CMAP")
     stamp = json.dumps(_TLOG_CMAP_SPEC, sort_keys=True)
 
-    def _ok() -> bool:
-        try:
-            return open(stamp_file).read() == stamp
-        except OSError:
-            return False
-
-    if _ok():
-        return
-    _tlog_build(spark, sf_dir, root)  # own flock; take ours after
-    lock_fh = open(os.path.join(root, ".lock"), "w")
-    fcntl.flock(lock_fh, fcntl.LOCK_EX)
-    try:
-        if _ok():
-            return
-        if _tlog_latest_version_safe(root) != 2:
-            # mutations from a superseded spec on this root: wipe and
-            # rebuild the base (the WAP recovery discipline). The
-            # build takes this same flock, so release around it.
-            for entry in os.listdir(root):
-                if entry == ".lock":
-                    continue
-                p = os.path.join(root, entry)
-                shutil.rmtree(p) if os.path.isdir(p) else os.unlink(p)
-            fcntl.flock(lock_fh, fcntl.LOCK_UN)
-            _tlog_build(spark, sf_dir, root)
-            fcntl.flock(lock_fh, fcntl.LOCK_EX)
-            if _ok():
-                return
+    def build() -> None:
         fields_v3 = [
             {"id": 1, "name": "o_orderkey"},
             {"id": 2, "name": "o_totalprice"},
@@ -5395,13 +4865,8 @@ def _tlog_apply_cmap(spark: SparkSession, sf_dir: str, root: str) -> None:
             "o_orderkey", "price_usd",
         ]:
             raise RuntimeError("column mapping did not replay to the head")
-        tmp = os.path.join(root, f"._CMAP.{os.getpid()}.tmp")
-        with open(tmp, "w") as fh:
-            fh.write(stamp)
-        os.replace(tmp, stamp_file)
-    finally:
-        fcntl.flock(lock_fh, fcntl.LOCK_UN)
-        lock_fh.close()
+
+    _tlog_apply_once(spark, sf_dir, root, "_CMAP", stamp, build)
 
 
 @register(
@@ -5627,58 +5092,29 @@ _TLOG_CMD_SPEC = {"impl": 1, "pred": _TLOG_CMD_PRED}
 
 
 def _tlog_apply_cmd(spark: SparkSession, sf_dir: str, root: str) -> None:
-    """Run the mapped-DELETE lifecycle once per dir (flock + stamp):
+    """Run the mapped-DELETE lifecycle once per dir:
     the full column-mapping lifecycle on a private root, then ONE
     logical-name DELETE whose predicate spells the RENAMED column —
     hitting pre-rename files (physical o_totalprice) and post-rename
     files (physical price_usd) in the same statement."""
-    import fcntl
     import json
 
     from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
         _tlog_latest_version as _latest,
     )
 
-    stamp_file = os.path.join(root, "_CMD")
     stamp = json.dumps(_TLOG_CMD_SPEC, sort_keys=True)
 
-    def _ok() -> bool:
-        try:
-            return open(stamp_file).read() == stamp
-        except OSError:
-            return False
-
-    if _ok():
-        return
-    _tlog_apply_cmap(spark, sf_dir, root)  # own flock; take ours after
-    lock_fh = open(os.path.join(root, ".lock"), "w")
-    fcntl.flock(lock_fh, fcntl.LOCK_EX)
-    try:
-        if _ok():
-            return
+    def build() -> None:
+        _tlog_apply_cmap(spark, sf_dir, root)
         if _latest(root) != 6:
             # a stale/crashed delete on this root: rebuild the base
-            # lifecycle from scratch (release-around, WAP discipline)
-            import shutil
-
-            for entry in os.listdir(root):
-                if entry == ".lock":
-                    continue
-                p = os.path.join(root, entry)
-                shutil.rmtree(p) if os.path.isdir(p) else os.unlink(p)
-            fcntl.flock(lock_fh, fcntl.LOCK_UN)
+            # lifecycle from scratch
+            wipe_dir(root)
             _tlog_apply_cmap(spark, sf_dir, root)
-            fcntl.flock(lock_fh, fcntl.LOCK_EX)
-            if _ok():
-                return
         _tlog_colmap_delete(spark, root, _TLOG_CMD_PRED)
-        tmp = os.path.join(root, f"._CMD.{os.getpid()}.tmp")
-        with open(tmp, "w") as fh:
-            fh.write(stamp)
-        os.replace(tmp, stamp_file)
-    finally:
-        fcntl.flock(lock_fh, fcntl.LOCK_UN)
-        lock_fh.close()
+
+    build_once(root, "_CMD", stamp, build)
 
 
 @register(
@@ -5966,14 +5402,13 @@ _TLOG_CMC_SPEC = {"impl": 1, "pred": _TLOG_CMC_PRED}
 
 
 def _tlog_apply_cmc(spark: SparkSession, sf_dir: str, root: str) -> None:
-    """Run the mapped-OPTIMIZE lifecycle once per dir (flock + stamp):
+    """Run the mapped-OPTIMIZE lifecycle once per dir:
     the full mapping + logical-DELETE lifecycle (v0-v7), then v8
     APPENDS file_G under the head spelling (no DV — the group
     compaction must NOT touch), then v9 COMPACTS: the mixed-spelling
     DV-bound cohorts (file_A/C/D physical o_totalprice; file_F
     physical price_usd) rewrite under the head spelling with their
     DVs materialized, while file_G survives byte-identical."""
-    import fcntl
     import json
 
     from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
@@ -5981,38 +5416,15 @@ def _tlog_apply_cmc(spark: SparkSession, sf_dir: str, root: str) -> None:
         _tlog_latest_version as _latest,
     )
 
-    stamp_file = os.path.join(root, "_CMC")
     stamp = json.dumps(_TLOG_CMC_SPEC, sort_keys=True)
 
-    def _ok() -> bool:
-        try:
-            return open(stamp_file).read() == stamp
-        except OSError:
-            return False
-
-    if _ok():
-        return
-    _tlog_apply_cmd(spark, sf_dir, root)  # own flock; take ours after
-    lock_fh = open(os.path.join(root, ".lock"), "w")
-    fcntl.flock(lock_fh, fcntl.LOCK_EX)
-    try:
-        if _ok():
-            return
+    def build() -> None:
+        _tlog_apply_cmd(spark, sf_dir, root)
         if _latest(root) != 7:
             # stale/crashed state on this root: rebuild the whole
-            # lifecycle from scratch (release-around, WAP discipline)
-            import shutil
-
-            for entry in os.listdir(root):
-                if entry == ".lock":
-                    continue
-                p = os.path.join(root, entry)
-                shutil.rmtree(p) if os.path.isdir(p) else os.unlink(p)
-            fcntl.flock(lock_fh, fcntl.LOCK_UN)
+            # lifecycle from scratch
+            wipe_dir(root)
             _tlog_apply_cmd(spark, sf_dir, root)
-            fcntl.flock(lock_fh, fcntl.LOCK_EX)
-            if _ok():
-                return
         # v8: append under the HEAD spelling, post-delete (keeps its
         # delete-band rows — the delete was a statement, not a rule)
         slice_df = (
@@ -6030,13 +5442,8 @@ def _tlog_apply_cmc(spark: SparkSession, sf_dir: str, root: str) -> None:
         )
         # v9: OPTIMIZE under the mapping
         _tlog_colmap_compact(spark, root)
-        tmp = os.path.join(root, f"._CMC.{os.getpid()}.tmp")
-        with open(tmp, "w") as fh:
-            fh.write(stamp)
-        os.replace(tmp, stamp_file)
-    finally:
-        fcntl.flock(lock_fh, fcntl.LOCK_UN)
-        lock_fh.close()
+
+    build_once(root, "_CMC", stamp, build)
 
 
 @register(
@@ -6253,49 +5660,25 @@ _TLOG_CMU_SPEC = {"impl": 1, "pred": _TLOG_CMU_PRED, "bump": _TLOG_CMU_BUMP}
 
 
 def _tlog_apply_cmu(spark: SparkSession, sf_dir: str, root: str) -> None:
-    """Run the mapped-UPDATE lifecycle once per dir (flock + stamp):
+    """Run the mapped-UPDATE lifecycle once per dir:
     the column-mapping lifecycle (v0-6), then ONE logical-name UPDATE
     whose predicate spells the RENAMED column — matching rows in
     pre-rename cohorts (file_A %4=0, file_D's %4=3 half) and the
     post-rename file_F, while file_C (%4=2) provably misses and is
     never rewritten."""
-    import fcntl
     import json
 
     from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
         _tlog_latest_version as _latest,
     )
 
-    stamp_file = os.path.join(root, "_CMU")
     stamp = json.dumps(_TLOG_CMU_SPEC, sort_keys=True)
 
-    def _ok() -> bool:
-        try:
-            return open(stamp_file).read() == stamp
-        except OSError:
-            return False
-
-    if _ok():
-        return
-    _tlog_apply_cmap(spark, sf_dir, root)  # own flock; take ours after
-    lock_fh = open(os.path.join(root, ".lock"), "w")
-    fcntl.flock(lock_fh, fcntl.LOCK_EX)
-    try:
-        if _ok():
-            return
+    def build() -> None:
+        _tlog_apply_cmap(spark, sf_dir, root)
         if _latest(root) != 6:
-            import shutil
-
-            for entry in os.listdir(root):
-                if entry == ".lock":
-                    continue
-                p = os.path.join(root, entry)
-                shutil.rmtree(p) if os.path.isdir(p) else os.unlink(p)
-            fcntl.flock(lock_fh, fcntl.LOCK_UN)
+            wipe_dir(root)
             _tlog_apply_cmap(spark, sf_dir, root)
-            fcntl.flock(lock_fh, fcntl.LOCK_EX)
-            if _ok():
-                return
         _, rewritten, untouched = _tlog_colmap_update(
             spark, root, _TLOG_CMU_PRED, "price_usd", _TLOG_CMU_BUMP
         )
@@ -6304,13 +5687,8 @@ def _tlog_apply_cmu(spark: SparkSession, sf_dir: str, root: str) -> None:
                 f"mapped UPDATE rewrote file_C (rewrote {rewritten}) — "
                 "CoW discovery must skip groups with no matched rows"
             )
-        tmp = os.path.join(root, f"._CMU.{os.getpid()}.tmp")
-        with open(tmp, "w") as fh:
-            fh.write(stamp)
-        os.replace(tmp, stamp_file)
-    finally:
-        fcntl.flock(lock_fh, fcntl.LOCK_UN)
-        lock_fh.close()
+
+    build_once(root, "_CMU", stamp, build)
 
 
 @register(
@@ -6436,57 +5814,28 @@ _TLOG_CMR_SPEC = {"impl": 1}
 
 
 def _tlog_apply_cmr(spark: SparkSession, sf_dir: str, root: str) -> None:
-    """Run the rename-rollback lifecycle once per dir (flock +
-    stamp): the mapping lifecycle (v0-6: enable, RENAME, append
-    file_F, DROP), then v7 RESTOREs to v3 (pre-rename: the OLD names
-    come back, file_F leaves), then v8 RESTOREs to v6 (the rename AND
-    file_F return — re-binding the re-added file)."""
-    import fcntl
+    """Run the rename-rollback lifecycle once per dir: the mapping
+    lifecycle (v0-6: enable, RENAME, append file_F, DROP), then v7
+    RESTOREs to v3 (pre-rename: the OLD names come back, file_F
+    leaves), then v8 RESTOREs to v6 (the rename AND file_F return —
+    re-binding the re-added file)."""
     import json
 
     from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
         _tlog_latest_version as _latest,
     )
 
-    stamp_file = os.path.join(root, "_CMR")
     stamp = json.dumps(_TLOG_CMR_SPEC, sort_keys=True)
 
-    def _ok() -> bool:
-        try:
-            return open(stamp_file).read() == stamp
-        except OSError:
-            return False
-
-    if _ok():
-        return
-    _tlog_apply_cmap(spark, sf_dir, root)  # own flock; take ours after
-    lock_fh = open(os.path.join(root, ".lock"), "w")
-    fcntl.flock(lock_fh, fcntl.LOCK_EX)
-    try:
-        if _ok():
-            return
+    def build() -> None:
+        _tlog_apply_cmap(spark, sf_dir, root)
         if _latest(root) != 6:
-            import shutil
-
-            for entry in os.listdir(root):
-                if entry == ".lock":
-                    continue
-                p = os.path.join(root, entry)
-                shutil.rmtree(p) if os.path.isdir(p) else os.unlink(p)
-            fcntl.flock(lock_fh, fcntl.LOCK_UN)
+            wipe_dir(root)
             _tlog_apply_cmap(spark, sf_dir, root)
-            fcntl.flock(lock_fh, fcntl.LOCK_EX)
-            if _ok():
-                return
         _tlog_colmap_restore(spark, root, 3)   # roll back across the rename
         _tlog_colmap_restore(spark, root, 6)   # roll forward again
-        tmp = os.path.join(root, f"._CMR.{os.getpid()}.tmp")
-        with open(tmp, "w") as fh:
-            fh.write(stamp)
-        os.replace(tmp, stamp_file)
-    finally:
-        fcntl.flock(lock_fh, fcntl.LOCK_UN)
-        lock_fh.close()
+
+    build_once(root, "_CMR", stamp, build)
 
 
 @register(
@@ -6715,49 +6064,25 @@ _TLOG_CMM_SPEC = {
 
 
 def _tlog_apply_cmm(spark: SparkSession, sf_dir: str, root: str) -> None:
-    """Run the mapped-MERGE lifecycle once per dir (flock + stamp):
+    """Run the mapped-MERGE lifecycle once per dir:
     the column-mapping lifecycle (v0-6), then ONE MERGE whose source
     carries the %{_TLOG_CMM_MOD}={_TLOG_CMM_RES} key band twice —
     positive keys as matched updates (every copy of the key in both
     spellings' cohorts takes the bump), negated keys as not-matched
     inserts (landing head-spelled)."""
-    import fcntl
     import json
 
     from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
         _tlog_latest_version as _latest,
     )
 
-    stamp_file = os.path.join(root, "_CMM")
     stamp = json.dumps(_TLOG_CMM_SPEC, sort_keys=True)
 
-    def _ok() -> bool:
-        try:
-            return open(stamp_file).read() == stamp
-        except OSError:
-            return False
-
-    if _ok():
-        return
-    _tlog_apply_cmap(spark, sf_dir, root)  # own flock; take ours after
-    lock_fh = open(os.path.join(root, ".lock"), "w")
-    fcntl.flock(lock_fh, fcntl.LOCK_EX)
-    try:
-        if _ok():
-            return
+    def build() -> None:
+        _tlog_apply_cmap(spark, sf_dir, root)
         if _latest(root) != 6:
-            import shutil
-
-            for entry in os.listdir(root):
-                if entry == ".lock":
-                    continue
-                p = os.path.join(root, entry)
-                shutil.rmtree(p) if os.path.isdir(p) else os.unlink(p)
-            fcntl.flock(lock_fh, fcntl.LOCK_UN)
+            wipe_dir(root)
             _tlog_apply_cmap(spark, sf_dir, root)
-            fcntl.flock(lock_fh, fcntl.LOCK_EX)
-            if _ok():
-                return
         band = load_table(spark, sf_dir, "orders").filter(
             F.col("o_orderkey") % _TLOG_CMM_MOD == _TLOG_CMM_RES
         )
@@ -6770,13 +6095,8 @@ def _tlog_apply_cmm(spark: SparkSession, sf_dir: str, root: str) -> None:
             (F.col("o_totalprice") + _TLOG_CMM_INS_BUMP).alias("price_usd"),
         )
         _tlog_colmap_merge(spark, root, updates, inserts)
-        tmp = os.path.join(root, f"._CMM.{os.getpid()}.tmp")
-        with open(tmp, "w") as fh:
-            fh.write(stamp)
-        os.replace(tmp, stamp_file)
-    finally:
-        fcntl.flock(lock_fh, fcntl.LOCK_UN)
-        lock_fh.close()
+
+    build_once(root, "_CMM", stamp, build)
 
 
 @register(
@@ -6925,51 +6245,26 @@ _TLOG_CMK_SPEC = {
 
 
 def _tlog_apply_cmk(spark: SparkSession, sf_dir: str, root: str) -> None:
-    """Run the mapped-constraint lifecycle once per dir (flock +
-    stamp): the mapping lifecycle (v0-6), then v7 ADDs a CHECK that
-    spells the RENAMED column (existing data validated THROUGH the
-    mapping, across both spellings' cohorts); an unsatisfiable mapped
-    ADD and a violating OLD-SPELLED append are both REJECTED
-    (asserted — the enforcement failure happens under the TRANSLATED
-    predicate); v8 is a clean old-spelled append through the
-    translating choke point."""
-    import fcntl
+    """Run the mapped-constraint lifecycle once per dir: the mapping
+    lifecycle (v0-6), then v7 ADDs a CHECK that spells the RENAMED
+    column (existing data validated THROUGH the mapping, across both
+    spellings' cohorts); an unsatisfiable mapped ADD and a violating
+    OLD-SPELLED append are both REJECTED (asserted — the enforcement
+    failure happens under the TRANSLATED predicate); v8 is a clean
+    old-spelled append through the translating choke point."""
     import json
 
     from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
         _tlog_latest_version as _latest,
     )
 
-    stamp_file = os.path.join(root, "_CMK")
     stamp = json.dumps(_TLOG_CMK_SPEC, sort_keys=True)
 
-    def _ok() -> bool:
-        try:
-            return open(stamp_file).read() == stamp
-        except OSError:
-            return False
-
-    if _ok():
-        return
-    _tlog_apply_cmap(spark, sf_dir, root)  # own flock; take ours after
-    lock_fh = open(os.path.join(root, ".lock"), "w")
-    fcntl.flock(lock_fh, fcntl.LOCK_EX)
-    try:
-        if _ok():
-            return
+    def build() -> None:
+        _tlog_apply_cmap(spark, sf_dir, root)
         if _latest(root) != 6:
-            import shutil
-
-            for entry in os.listdir(root):
-                if entry == ".lock":
-                    continue
-                p = os.path.join(root, entry)
-                shutil.rmtree(p) if os.path.isdir(p) else os.unlink(p)
-            fcntl.flock(lock_fh, fcntl.LOCK_UN)
+            wipe_dir(root)
             _tlog_apply_cmap(spark, sf_dir, root)
-            fcntl.flock(lock_fh, fcntl.LOCK_EX)
-            if _ok():
-                return
         # an unsatisfiable mapped ADD is rejected after validating
         # THROUGH the mapping (both spellings' cohorts scanned)
         try:
@@ -7006,13 +6301,8 @@ def _tlog_apply_cmk(spark: SparkSession, sf_dir: str, root: str) -> None:
             orders.filter(F.expr(_TLOG_CMK_ADD_PRED)),
             "file_cmk_ok", old_binding,
         )
-        tmp = os.path.join(root, f"._CMK.{os.getpid()}.tmp")
-        with open(tmp, "w") as fh:
-            fh.write(stamp)
-        os.replace(tmp, stamp_file)
-    finally:
-        fcntl.flock(lock_fh, fcntl.LOCK_UN)
-        lock_fh.close()
+
+    build_once(root, "_CMK", stamp, build)
 
 
 @register(
@@ -7095,51 +6385,27 @@ _TLOG_CMX_SPEC = {
 
 
 def _tlog_apply_cmx(spark: SparkSession, sf_dir: str, root: str) -> None:
-    """Run the composed mapped-DML lifecycle once per dir (flock +
-    stamp): the mapping lifecycle (v0-6), then THREE statements on
-    the SAME root — v7 logical-name DELETE (merge-on-read DVs on both
-    spellings), v8 UPDATE (CoW over the DV'd state: rewritten groups
-    materialize their DVs, untouched groups keep theirs), v9 MERGE
-    (source-driven CoW + inserts over the composed state). The order
-    is the hostile one: every later statement must compose with the
-    earlier statements' sidecar debt and binding churn."""
-    import fcntl
+    """Run the composed mapped-DML lifecycle once per dir: the mapping
+    lifecycle (v0-6), then THREE statements on the SAME root — v7
+    logical-name DELETE (merge-on-read DVs on both spellings), v8
+    UPDATE (CoW over the DV'd state: rewritten groups materialize
+    their DVs, untouched groups keep theirs), v9 MERGE (source-driven
+    CoW + inserts over the composed state). The order is the hostile
+    one: every later statement must compose with the earlier
+    statements' sidecar debt and binding churn."""
     import json
 
     from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
         _tlog_latest_version as _latest,
     )
 
-    stamp_file = os.path.join(root, "_CMX")
     stamp = json.dumps(_TLOG_CMX_SPEC, sort_keys=True)
 
-    def _ok() -> bool:
-        try:
-            return open(stamp_file).read() == stamp
-        except OSError:
-            return False
-
-    if _ok():
-        return
-    _tlog_apply_cmap(spark, sf_dir, root)  # own flock; take ours after
-    lock_fh = open(os.path.join(root, ".lock"), "w")
-    fcntl.flock(lock_fh, fcntl.LOCK_EX)
-    try:
-        if _ok():
-            return
+    def build() -> None:
+        _tlog_apply_cmap(spark, sf_dir, root)
         if _latest(root) != 6:
-            import shutil
-
-            for entry in os.listdir(root):
-                if entry == ".lock":
-                    continue
-                p = os.path.join(root, entry)
-                shutil.rmtree(p) if os.path.isdir(p) else os.unlink(p)
-            fcntl.flock(lock_fh, fcntl.LOCK_UN)
+            wipe_dir(root)
             _tlog_apply_cmap(spark, sf_dir, root)
-            fcntl.flock(lock_fh, fcntl.LOCK_EX)
-            if _ok():
-                return
         _tlog_colmap_delete(spark, root, _TLOG_CMD_PRED)
         _tlog_colmap_update(
             spark, root, _TLOG_CMU_PRED, "price_usd", _TLOG_CMU_BUMP
@@ -7159,13 +6425,8 @@ def _tlog_apply_cmx(spark: SparkSession, sf_dir: str, root: str) -> None:
                 (F.col("o_totalprice") + _TLOG_CMM_INS_BUMP).alias("price_usd"),
             ),
         )
-        tmp = os.path.join(root, f"._CMX.{os.getpid()}.tmp")
-        with open(tmp, "w") as fh:
-            fh.write(stamp)
-        os.replace(tmp, stamp_file)
-    finally:
-        fcntl.flock(lock_fh, fcntl.LOCK_UN)
-        lock_fh.close()
+
+    build_once(root, "_CMX", stamp, build)
 
 
 @register(
@@ -7537,7 +6798,7 @@ _TLOG_SCM_SCHEMA = "o_orderkey long, o_totalprice double"
 
 
 def _tlog_apply_scm(spark: SparkSession, sf_dir: str) -> str:
-    """Run the rename-mid-stream lifecycle once (flock + stamp): a
+    """Run the rename-mid-stream lifecycle once: a
     file-source stream drains the even-keyed half of orders into a
     MAPPED table (every batch commit binds its group's physical
     names); a RENAME commit lands between micro-batches — the stream
@@ -7547,9 +6808,7 @@ def _tlog_apply_scm(spark: SparkSession, sf_dir: str) -> str:
     through the SAME checkpoint. Post-rename batches still land
     physical ``o_totalprice`` — the mapping, not a rewrite, serves
     them under ``price_usd``."""
-    import fcntl
     import json
-    import shutil
 
     from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
         _tlog_batch_committed,
@@ -7557,29 +6816,12 @@ def _tlog_apply_scm(spark: SparkSession, sf_dir: str) -> str:
     )
 
     src, root = _tlog_scm_dirs(sf_dir)
-    stamp_file = os.path.join(root, "_SCM")
     stamp = json.dumps(_TLOG_SCM_SPEC, sort_keys=True)
 
-    def _ok() -> bool:
-        try:
-            return open(stamp_file).read() == stamp
-        except OSError:
-            return False
-
-    if _ok():
-        return root
-    os.makedirs(root, exist_ok=True)
-    lock_fh = open(os.path.join(root, ".lock"), "w")
-    fcntl.flock(lock_fh, fcntl.LOCK_EX)
-    try:
-        if _ok():
-            return root
+    def build() -> None:
         for d in (root, src):
-            for entry in os.listdir(d) if os.path.isdir(d) else []:
-                if entry == ".lock":
-                    continue
-                p = os.path.join(d, entry)
-                shutil.rmtree(p) if os.path.isdir(p) else os.unlink(p)
+            if os.path.isdir(d):
+                wipe_dir(d)
         os.makedirs(os.path.join(root, "_log"), exist_ok=True)
         orders = load_table(spark, sf_dir, "orders").select(
             "o_orderkey", "o_totalprice"
@@ -7665,14 +6907,8 @@ def _tlog_apply_scm(spark: SparkSession, sf_dir: str) -> str:
                 f"rename-mid-stream ingest landed {got} rows, source has "
                 f"{want} — a batch was lost, double-applied, or re-read"
             )
-        tmp = os.path.join(root, f"._SCM.{os.getpid()}.tmp")
-        with open(tmp, "w") as fh:
-            fh.write(stamp)
-        os.replace(tmp, stamp_file)
-    finally:
-        fcntl.flock(lock_fh, fcntl.LOCK_UN)
-        lock_fh.close()
-    return root
+
+    return build_once(root, "_SCM", stamp, build)
 
 
 @register(
@@ -7743,7 +6979,7 @@ _TLOG_SDP_SCHEMA = "o_orderkey long, o_totalprice double, channel int"
 
 
 def _tlog_apply_sdp(spark: SparkSession, sf_dir: str) -> str:
-    """Run the drop-mid-stream lifecycle once (flock + stamp): a
+    """Run the drop-mid-stream lifecycle once: a
     file-source stream drains the even-keyed half of orders — THREE
     columns, ``channel`` included — into a mapped table whose batch
     commits bind field ids 1/2/3; a DROP COLUMN commit (field 3
@@ -7753,9 +6989,7 @@ def _tlog_apply_sdp(spark: SparkSession, sf_dir: str) -> str:
     but the writer resolves the LIVE mapping at commit time, so
     post-drop commits bind ONLY ids 1/2: the channel bytes land
     physically and are unreachable from birth."""
-    import fcntl
     import json
-    import shutil
 
     from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
         _tlog_batch_committed,
@@ -7764,29 +6998,12 @@ def _tlog_apply_sdp(spark: SparkSession, sf_dir: str) -> str:
     )
 
     src, root = _tlog_sdp_dirs(sf_dir)
-    stamp_file = os.path.join(root, "_SDP")
     stamp = json.dumps(_TLOG_SDP_SPEC, sort_keys=True)
 
-    def _ok() -> bool:
-        try:
-            return open(stamp_file).read() == stamp
-        except OSError:
-            return False
-
-    if _ok():
-        return root
-    os.makedirs(root, exist_ok=True)
-    lock_fh = open(os.path.join(root, ".lock"), "w")
-    fcntl.flock(lock_fh, fcntl.LOCK_EX)
-    try:
-        if _ok():
-            return root
+    def build() -> None:
         for d in (root, src):
-            for entry in os.listdir(d) if os.path.isdir(d) else []:
-                if entry == ".lock":
-                    continue
-                p = os.path.join(d, entry)
-                shutil.rmtree(p) if os.path.isdir(p) else os.unlink(p)
+            if os.path.isdir(d):
+                wipe_dir(d)
         os.makedirs(os.path.join(root, "_log"), exist_ok=True)
         orders = load_table(spark, sf_dir, "orders").select(
             "o_orderkey",
@@ -7881,14 +7098,8 @@ def _tlog_apply_sdp(spark: SparkSession, sf_dir: str) -> str:
                 f"drop-mid-stream ingest landed {got} rows, source has "
                 f"{want} — a batch was lost, double-applied, or re-read"
             )
-        tmp = os.path.join(root, f"._SDP.{os.getpid()}.tmp")
-        with open(tmp, "w") as fh:
-            fh.write(stamp)
-        os.replace(tmp, stamp_file)
-    finally:
-        fcntl.flock(lock_fh, fcntl.LOCK_UN)
-        lock_fh.close()
-    return root
+
+    return build_once(root, "_SDP", stamp, build)
 
 
 @register(
@@ -8165,7 +7376,7 @@ _TLOG_BKT_SPEC = {"impl": 1, "n": _TLOG_BKT_N, "split_mod": 5}
 
 
 def _tlog_apply_bkt(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
-    """Build the two same-bucketed LOG tables once per corpus (flock +
+    """Build the two same-bucketed LOG tables once per corpus (one
     stamp each): an orders projection bucketed on o_orderkey and a
     lineitem projection bucketed on l_orderkey, both bucket(key, 8).
     Each table: v0 establishes the spec AND lands the first routed
@@ -8173,7 +7384,6 @@ def _tlog_apply_bkt(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     the live spec (reads bucket(key, N) from the log, not from
     convention) — the mixed-commit state that proves co-location
     survives appends."""
-    import fcntl
     import json
 
     from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
@@ -8188,59 +7398,35 @@ def _tlog_apply_bkt(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
          ["l_orderkey", "l_extendedprice", "l_discount"]),
     ]
     stamp = json.dumps(_TLOG_BKT_SPEC, sort_keys=True)
-    for root, src, key, cols in jobs:
-        stamp_file = os.path.join(root, "_BKT")
 
-        def _ok() -> bool:
-            try:
-                return open(stamp_file).read() == stamp
-            except OSError:
-                return False
-
-        if _ok():
-            continue
+    def build(root: str, src: str, key: str, cols: list[str]) -> None:
         os.makedirs(os.path.join(root, "_log"), exist_ok=True)
-        lock_fh = open(os.path.join(root, ".lock"), "w")
-        fcntl.flock(lock_fh, fcntl.LOCK_EX)
-        try:
-            if _ok():
-                continue
-            if _tlog_latest_version_safe(root) >= 0:
-                # commits without a matching stamp: stale partial
-                # lifecycle — wipe and rebuild
-                import shutil
+        if _tlog_latest_version_safe(root) >= 0:
+            # commits without a matching stamp: stale partial
+            # lifecycle — wipe and rebuild
+            wipe_dir(root)
+            os.makedirs(os.path.join(root, "_log"), exist_ok=True)
+        df = load_table(spark, sf_dir, src).select(*cols)
+        spec = (key, _TLOG_BKT_N)
+        rule = {"spec_id": 0, "rule": f"bucket({key}, {_TLOG_BKT_N})"}
+        mod = _TLOG_BKT_SPEC["split_mod"]
+        _tlog_bucketed_stage(
+            spark, df.filter(F.col(key) % mod != 0), root,
+            "file_bkt0", spec,
+        )
+        _tlog_bucketed_commit(
+            root, ["file_bkt0"], -1, spec, partitioning=rule,
+        )
+        # the APPEND writer consults the LIVE spec from the log
+        live = _tlog_bucket_spec(root, 0)
+        _tlog_bucketed_stage(
+            spark, df.filter(F.col(key) % mod == 0), root,
+            "file_bkt1", live,
+        )
+        _tlog_bucketed_commit(root, ["file_bkt1"], 0, live)
 
-                for entry in os.listdir(root):
-                    if entry == ".lock":
-                        continue
-                    p = os.path.join(root, entry)
-                    shutil.rmtree(p) if os.path.isdir(p) else os.unlink(p)
-                os.makedirs(os.path.join(root, "_log"), exist_ok=True)
-            df = load_table(spark, sf_dir, src).select(*cols)
-            spec = (key, _TLOG_BKT_N)
-            rule = {"spec_id": 0, "rule": f"bucket({key}, {_TLOG_BKT_N})"}
-            mod = _TLOG_BKT_SPEC["split_mod"]
-            _tlog_bucketed_stage(
-                spark, df.filter(F.col(key) % mod != 0), root,
-                "file_bkt0", spec,
-            )
-            _tlog_bucketed_commit(
-                root, ["file_bkt0"], -1, spec, partitioning=rule,
-            )
-            # the APPEND writer consults the LIVE spec from the log
-            live = _tlog_bucket_spec(root, 0)
-            _tlog_bucketed_stage(
-                spark, df.filter(F.col(key) % mod == 0), root,
-                "file_bkt1", live,
-            )
-            _tlog_bucketed_commit(root, ["file_bkt1"], 0, live)
-            tmp = os.path.join(root, f"._BKT.{os.getpid()}.tmp")
-            with open(tmp, "w") as fh:
-                fh.write(stamp)
-            os.replace(tmp, stamp_file)
-        finally:
-            fcntl.flock(lock_fh, fcntl.LOCK_UN)
-            lock_fh.close()
+    for root, src, key, cols in jobs:
+        build_once(root, "_BKT", stamp, lambda: build(root, src, key, cols))
     return o_root, l_root
 
 
@@ -8502,7 +7688,7 @@ _TLOG_BKTIN_SPEC = {
 
 def _tlog_apply_bkt_ingest(spark: SparkSession, root: str) -> None:
     """Drain the bounded synthetic stream into a BUCKETED log table
-    (flock + stamp): v0 establishes bucket(event_id, 8) as pure
+   : v0 establishes bucket(event_id, 8) as pure
     metadata; each micro-batch reads the LIVE spec from the log,
     hash-routes its rows through the bucketed stage, validates at
     the gate, and commits with its batch id (re-delivered batches
@@ -8511,9 +7697,7 @@ def _tlog_apply_bkt_ingest(spark: SparkSession, root: str) -> None:
     the spec per batch, not per query: pre-evolution batch groups
     carry 8-way tags, post-evolution groups 16-way, and the mixed
     snapshot reads whole."""
-    import fcntl
     import json
-    import shutil
 
     from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
         _tlog_batch_committed,
@@ -8525,44 +7709,10 @@ def _tlog_apply_bkt_ingest(spark: SparkSession, root: str) -> None:
         register_synthetic_stream_source,
     )
 
-    stamp_file = os.path.join(root, "_BKTIN")
     stamp = json.dumps(_TLOG_BKTIN_SPEC, sort_keys=True)
 
-    def _ok() -> bool:
-        try:
-            return open(stamp_file).read() == stamp
-        except OSError:
-            return False
-
-    if _ok():
-        return
-    os.makedirs(root, exist_ok=True)
-    lock_fh = open(os.path.join(root, ".lock"), "w")
-    fcntl.flock(lock_fh, fcntl.LOCK_EX)
-    try:
-        if _ok():
-            return
-        spec_file = os.path.join(root, "_BKTIN_SPEC")
-        stale = False
-        try:
-            stale = open(spec_file).read() != stamp
-        except OSError:
-            stale = os.path.isdir(os.path.join(root, "_log")) and any(
-                f.endswith(".json")
-                for f in os.listdir(os.path.join(root, "_log"))
-            )
-        if stale:
-            for entry in os.listdir(root):
-                if entry == ".lock":
-                    continue
-                p = os.path.join(root, entry)
-                shutil.rmtree(p) if os.path.isdir(p) else os.unlink(p)
-        os.makedirs(os.path.join(root, "_log"), exist_ok=True)
-        if not os.path.exists(spec_file):
-            tmp = os.path.join(root, f"._SPEC.{os.getpid()}.tmp")
-            with open(tmp, "w") as fh:
-                fh.write(stamp)
-            os.replace(tmp, spec_file)
+    def build() -> None:
+        _tlog_resume_or_wipe(root, stamp, "_BKTIN_SPEC")
         if _tlog_latest_version_safe(root) < 0:
             # v0: the spec entry alone — metadata bootstrap
             _tlog_commit(
@@ -8617,13 +7767,8 @@ def _tlog_apply_bkt_ingest(spark: SparkSession, root: str) -> None:
                 f"{want} — a batch was lost, double-applied, or the "
                 "mid-stream evolution did not land"
             )
-        tmp = os.path.join(root, f"._BKTIN.{os.getpid()}.tmp")
-        with open(tmp, "w") as fh:
-            fh.write(stamp)
-        os.replace(tmp, stamp_file)
-    finally:
-        fcntl.flock(lock_fh, fcntl.LOCK_UN)
-        lock_fh.close()
+
+    build_once(root, "_BKTIN", stamp, build)
 
 
 # --- DML on a BUCKETED table (r19 queue candidate (a), machinery -----------
@@ -9172,7 +8317,7 @@ _TLOG_BKCMS_SPEC = {
 
 def _tlog_apply_bktcm_ingest(spark: SparkSession, root: str) -> None:
     """Drain the bounded synthetic stream into a MAPPED bucketed log
-    table (flock + stamp): v0 establishes bucket(event_id, 8) AND the
+    table: v0 establishes bucket(event_id, 8) AND the
     column mapping as pure metadata; each batch reads the LIVE spec
     and the LIVE mapping, spells its columns by field id, routes
     through the bucketed stage, and commits group + binding with its
@@ -9180,9 +8325,7 @@ def _tlog_apply_bktcm_ingest(spark: SparkSession, root: str) -> None:
     first RENAMES event_id -> evt_id — one atomic metadata commit —
     so pre-rename groups bind the old spelling and post-rename groups
     the new, the per-batch spelling-tracking proof."""
-    import fcntl
     import json
-    import shutil
 
     from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
         _tlog_batch_committed,
@@ -9195,44 +8338,10 @@ def _tlog_apply_bktcm_ingest(spark: SparkSession, root: str) -> None:
         register_synthetic_stream_source,
     )
 
-    stamp_file = os.path.join(root, "_BKCMS")
     stamp = json.dumps(_TLOG_BKCMS_SPEC, sort_keys=True)
 
-    def _ok() -> bool:
-        try:
-            return open(stamp_file).read() == stamp
-        except OSError:
-            return False
-
-    if _ok():
-        return
-    os.makedirs(root, exist_ok=True)
-    lock_fh = open(os.path.join(root, ".lock"), "w")
-    fcntl.flock(lock_fh, fcntl.LOCK_EX)
-    try:
-        if _ok():
-            return
-        spec_file = os.path.join(root, "_BKCMS_SPEC")
-        stale = False
-        try:
-            stale = open(spec_file).read() != stamp
-        except OSError:
-            stale = os.path.isdir(os.path.join(root, "_log")) and any(
-                f.endswith(".json")
-                for f in os.listdir(os.path.join(root, "_log"))
-            )
-        if stale:
-            for entry in os.listdir(root):
-                if entry == ".lock":
-                    continue
-                p = os.path.join(root, entry)
-                shutil.rmtree(p) if os.path.isdir(p) else os.unlink(p)
-        os.makedirs(os.path.join(root, "_log"), exist_ok=True)
-        if not os.path.exists(spec_file):
-            tmp = os.path.join(root, f"._SPEC.{os.getpid()}.tmp")
-            with open(tmp, "w") as fh:
-                fh.write(stamp)
-            os.replace(tmp, spec_file)
+    def build() -> None:
+        _tlog_resume_or_wipe(root, stamp, "_BKCMS_SPEC")
         if _tlog_latest_version_safe(root) < 0:
             # v0: bucket spec + column mapping — metadata bootstrap
             _tlog_commit(
@@ -9305,13 +8414,8 @@ def _tlog_apply_bktcm_ingest(spark: SparkSession, root: str) -> None:
                 f"expected {want} — a batch was lost, double-applied, or "
                 "the mid-stream rename did not land"
             )
-        tmp = os.path.join(root, f"._BKCMS.{os.getpid()}.tmp")
-        with open(tmp, "w") as fh:
-            fh.write(stamp)
-        os.replace(tmp, stamp_file)
-    finally:
-        fcntl.flock(lock_fh, fcntl.LOCK_UN)
-        lock_fh.close()
+
+    build_once(root, "_BKCMS", stamp, build)
 
 
 interpolate_docstrings(globals())

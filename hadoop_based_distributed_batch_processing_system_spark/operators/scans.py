@@ -21,7 +21,14 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from hadoop_based_distributed_batch_processing_system_spark.registry import register
-from hadoop_based_distributed_batch_processing_system_spark.sources.io import corpus_tag, load_table, sink_parquet
+from hadoop_based_distributed_batch_processing_system_spark.sources.io import (
+    build_once,
+    corpus_tag,
+    load_table,
+    sink_parquet,
+    wipe_dir,
+    write_atomic,
+)
 
 
 @register(
@@ -640,39 +647,21 @@ def _tlog_built_ok(root: str) -> bool:
 
 
 def _tlog_build(spark: SparkSession, sf_dir: str, root: str) -> str:
-    """Synthesize the commit-log table dir (idempotent). The build is
-    ``fcntl.flock``-serialized across processes — concurrent pytest /
-    bench sessions previously raced a half-built dir, one overwriting
-    ``file_A..D`` while another scanned them (ADVICE r10) — and the
-    ``_BUILT`` stamp is the serialized slice+commit spec, so editing
-    the layout rebuilds instead of serving a stale table. A process
-    arriving after the winner releases the lock hits the stamp
-    fast-path, same discipline as tests/conftest._build_doc_subset.
+    """Synthesize the commit-log table dir once per root
+    (:func:`build_once`). The ``_BUILT`` stamp is the serialized
+    slice+commit spec, so editing the layout rebuilds instead of
+    serving a stale table (ADVICE r10), and ``_tlog_built_ok`` also
+    demands every promised artifact.
 
-    A rebuild WIPES the root first (everything but the held lock):
-    derived commits (merge/schema/compaction/DV at v3+) and their
-    stamps key only on their OWN specs, so rebuilding the base in
-    place would leave stale derived files from the old slice layout
-    being served as current — exactly the silent-stale failure the
-    spec-stamp discipline exists to close (ADVICE r11 medium)."""
-    import fcntl
-    import shutil
+    A rebuild WIPES the root first: derived commits
+    (merge/schema/compaction/DV at v3+) and their stamps key only on
+    their OWN specs, so rebuilding the base in place would leave stale
+    derived files from the old slice layout being served as current
+    (ADVICE r11 medium)."""
+    import json
 
-    if _tlog_built_ok(root):
-        return root
-    os.makedirs(root, exist_ok=True)
-    lock_fh = open(os.path.join(root, ".lock"), "w")
-    fcntl.flock(lock_fh, fcntl.LOCK_EX)
-    try:
-        if _tlog_built_ok(root):
-            return root
-        import json
-
-        for entry in os.listdir(root):
-            if entry == ".lock":
-                continue
-            p = os.path.join(root, entry)
-            shutil.rmtree(p) if os.path.isdir(p) else os.unlink(p)
+    def build() -> None:
+        wipe_dir(root)
         orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
         for name, residues in _TLOG_SLICES.items():
             orders.filter((F.col("o_orderkey") % 4).isin(*residues)).write.mode(
@@ -717,18 +706,31 @@ def _tlog_build(spark: SparkSession, sf_dir: str, root: str) -> str:
             prev_ts = payload["ts"] = _tlog_next_ts(
                 json.dumps(c, sort_keys=True), prev_ts
             )
-            tmp = os.path.join(logd, f".{v:06d}.{os.getpid()}.tmp")
-            with open(tmp, "w") as fh:
-                json.dump(payload, fh)
-            os.replace(tmp, os.path.join(logd, f"{v:06d}.json"))
-        tmp = os.path.join(root, f"._BUILT.{os.getpid()}.tmp")
-        with open(tmp, "w") as fh:
-            fh.write(_tlog_spec_stamp())
-        os.replace(tmp, os.path.join(root, "_BUILT"))
-    finally:
-        fcntl.flock(lock_fh, fcntl.LOCK_UN)
-        lock_fh.close()
-    return root
+            write_atomic(os.path.join(logd, f"{v:06d}.json"), json.dumps(payload))
+
+    return build_once(
+        root, "_BUILT", _tlog_spec_stamp(), build, ready=lambda: _tlog_built_ok(root)
+    )
+
+
+def _tlog_apply_once(
+    spark: SparkSession, sf_dir: str, root: str, stamp_name: str, stamp: str,
+    build, *, ready=None,
+) -> None:
+    """:func:`build_once` for a lifecycle that composes on the base
+    table at exactly v2: the base is built if missing, and a log at any
+    other version holds mutations from a superseded spec, so it is
+    wiped and the base rebuilt (``_tlog_build`` re-enters the held
+    lock) before ``build``."""
+
+    def rebase_then_build() -> None:
+        _tlog_build(spark, sf_dir, root)  # no-op when intact
+        if _tlog_latest_version(root) != 2:
+            wipe_dir(root)
+            _tlog_build(spark, sf_dir, root)
+        build()
+
+    build_once(root, stamp_name, stamp, rebase_then_build, ready=ready)
 
 
 def _tlog_next_ts(payload_json: str, prev_ts: int) -> int:
@@ -1504,7 +1506,7 @@ def table_log_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     superset) — then ALL THREE snapshots are read back (time travel)
     and fingerprinted with exact-integer aggregates, hash-checked
     against recomputing each version straight from the source table.
-    The build is flock-serialized and spec-stamped (ADVICE r10);
+    The build is spec-stamped (ADVICE r10);
     ``table_log_merge_upsert`` adds the WRITE path (MERGE commit,
     optimistic concurrency, checkpointing) on this format.
 
@@ -1850,20 +1852,8 @@ _TLOG_MERGE_SPEC = {
 }
 
 
-def _tlog_merged_ok(root: str) -> bool:
-    import json
-
-    try:
-        return open(os.path.join(root, "_MERGED")).read() == json.dumps(
-            _TLOG_MERGE_SPEC, sort_keys=True
-        )
-    except OSError:
-        return False
-
-
 def _tlog_apply_merge(spark: SparkSession, sf_dir: str, root: str) -> None:
-    """Run the MERGE-INTO commit once per table dir (flock-serialized,
-    spec-stamped like the base build). Steps — the standard
+    """Run the MERGE-INTO commit once per table dir. Steps — the standard
     copy-on-write MERGE plan:
 
     1. file-pruning DISCOVERY: join the source's match keys against
@@ -1894,16 +1884,9 @@ def _tlog_apply_merge(spark: SparkSession, sf_dir: str, root: str) -> None:
     A lost commit race with IDENTICAL content (another session ran
     the same deterministic merge between our stamp check and commit)
     is recovery, not conflict: adopt the winner's commit."""
-    import fcntl
     import json
 
-    if _tlog_merged_ok(root):
-        return
-    lock_fh = open(os.path.join(root, ".lock"), "w")
-    fcntl.flock(lock_fh, fcntl.LOCK_EX)
-    try:
-        if _tlog_merged_ok(root):
-            return
+    def build() -> None:
         base = _tlog_latest_version(root)
         live = _tlog_live_files(root, base)
         rel = _tlog_relation(spark, live).withColumn(
@@ -1975,13 +1958,8 @@ def _tlog_apply_merge(spark: SparkSession, sf_dir: str, root: str) -> None:
             read_set=set(affected),
             stats=stats or None,
         )
-        tmp = os.path.join(root, f"._MERGED.{os.getpid()}.tmp")
-        with open(tmp, "w") as fh:
-            fh.write(json.dumps(_TLOG_MERGE_SPEC, sort_keys=True))
-        os.replace(tmp, os.path.join(root, "_MERGED"))
-    finally:
-        fcntl.flock(lock_fh, fcntl.LOCK_UN)
-        lock_fh.close()
+
+    build_once(root, "_MERGED", json.dumps(_TLOG_MERGE_SPEC, sort_keys=True), build)
 
 
 @register(
@@ -2077,34 +2055,16 @@ def _tlog_schema_root(sf_dir: str) -> str:
     return os.path.join(tempfile.gettempdir(), f"hbdbps_tablelogs_{corpus_tag(sf_dir)}")
 
 
-def _tlog_schema_ok(root: str) -> bool:
-    import json
-
-    try:
-        return open(os.path.join(root, "_SCHEMA_EVOLVED")).read() == json.dumps(
-            _TLOG_SCHEMA_SPEC, sort_keys=True
-        )
-    except OSError:
-        return False
-
-
 def _tlog_apply_schema_commit(spark: SparkSession, sf_dir: str, root: str) -> None:
-    """Commit a WIDER-SCHEMA append once per table dir (flock +
-    spec-stamp, the merge discipline): ``file_E`` carries a new
-    ``o_flag`` column the base files don't have, published through
-    the same put-if-absent commit protocol. Identical-content races
-    are adopted as recovery, like the merge."""
-    import fcntl
+    """Commit a WIDER-SCHEMA append once per table dir: ``file_E``
+    carries a new ``o_flag`` column the base files don't have,
+    published through the same put-if-absent commit protocol.
+    Identical-content races are adopted as recovery, like the merge."""
     import json
 
-    if _tlog_schema_ok(root):
-        return
-    lock_fh = open(os.path.join(root, ".lock"), "w")
-    fcntl.flock(lock_fh, fcntl.LOCK_EX)
-    try:
-        if _tlog_schema_ok(root):
-            return
-        spec = _TLOG_SCHEMA_SPEC
+    spec = _TLOG_SCHEMA_SPEC
+
+    def build() -> None:
         base = _tlog_latest_version(root)
         orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
         wider = orders.filter(
@@ -2121,13 +2081,8 @@ def _tlog_apply_schema_commit(spark: SparkSession, sf_dir: str, root: str) -> No
         _tlog_commit_rebase(
             root, add=["file_E"], remove=[], base_version=base, read_set=set()
         )
-        tmp = os.path.join(root, f"._SCHEMA_EVOLVED.{os.getpid()}.tmp")
-        with open(tmp, "w") as fh:
-            fh.write(json.dumps(spec, sort_keys=True))
-        os.replace(tmp, os.path.join(root, "_SCHEMA_EVOLVED"))
-    finally:
-        fcntl.flock(lock_fh, fcntl.LOCK_UN)
-        lock_fh.close()
+
+    build_once(root, "_SCHEMA_EVOLVED", json.dumps(spec, sort_keys=True), build)
 
 
 @register(
@@ -2211,28 +2166,16 @@ def _tlog_vacuumed(root: str) -> set[str]:
 
 
 def _tlog_apply_compact(spark: SparkSession, sf_dir: str, root: str) -> None:
-    """OPTIMIZE-style COMPACTION COMMIT once per table dir (flock +
-    stamp): read the latest snapshot's live files, rewrite them as
-    ONE range-partitioned, key-sorted file group (small-file
-    compaction + clustering in one pass — sorted non-overlapping
-    runs are what make manifest min/max stats selective), and
-    publish add+remove in a single put-if-absent commit. The
-    snapshot's CONTENT is unchanged by construction — that is the
-    oracle: compaction is a physical re-layout, logically a no-op."""
-    import fcntl
-    import json
+    """OPTIMIZE-style COMPACTION COMMIT once per table dir: read the
+    latest snapshot's live files, rewrite them as ONE
+    range-partitioned, key-sorted file group (small-file compaction +
+    clustering in one pass — sorted non-overlapping runs are what make
+    manifest min/max stats selective), and publish add+remove in a
+    single put-if-absent commit. The snapshot's CONTENT is unchanged
+    by construction — that is the oracle: compaction is a physical
+    re-layout, logically a no-op."""
 
-    # v2 marker: the v1 layout (one file group, no stats) upgrades by
-    # re-compacting on top of its own latest snapshot — compaction is
-    # content-preserving, so stacking one more commit is safe.
-    marker = os.path.join(root, "_COMPACTED_V2")
-    if os.path.exists(marker):
-        return
-    lock_fh = open(os.path.join(root, ".lock"), "w")
-    fcntl.flock(lock_fh, fcntl.LOCK_EX)
-    try:
-        if os.path.exists(marker):
-            return
+    def build() -> None:
         base = _tlog_latest_version(root)
         live = _tlog_live_files(root, base)
         rel = _tlog_relation(spark, live)
@@ -2316,13 +2259,11 @@ def _tlog_apply_compact(spark: SparkSession, sf_dir: str, root: str) -> None:
             root, add=add, remove=removed, base_version=base,
             read_set=set(removed), stats=stats,
         )
-        tmp = os.path.join(root, f"._COMPACTED.{os.getpid()}.tmp")
-        with open(tmp, "w") as fh:
-            fh.write("v1")
-        os.replace(tmp, marker)
-    finally:
-        fcntl.flock(lock_fh, fcntl.LOCK_UN)
-        lock_fh.close()
+
+    # v2 marker: the v1 layout (one file group, no stats) upgrades by
+    # re-compacting on top of its own latest snapshot — compaction is
+    # content-preserving, so stacking one more commit is safe.
+    build_once(root, "_COMPACTED_V2", "v1", build)
 
 
 def _tlog_vacuum(
@@ -2478,7 +2419,7 @@ def _tlog_replicate(
     dst_root: str,
     extra_stamp: str = "",
 ) -> None:
-    """CDC REPLICATION once per replica dir (flock + stamp): bootstrap
+    """CDC REPLICATION once per replica dir: bootstrap
     the replica from the source's v0 snapshot, then drain the
     source's change feed with ``foreachBatch`` — each micro-batch
     (exactly one source commit) is applied as ONE transactional
@@ -2489,19 +2430,16 @@ def _tlog_replicate(
     drain, the replica's commit count must equal the source's —
     checked loudly.
 
-    Recovery discipline (ADVICE r11: the previous existence-only
-    stamp had no path out of a crashed drain — the bootstrap
-    conflict was silently adopted and the feed restarted at offset
-    1, double-applying forever): the stamp carries the SOURCE SPEC,
-    and entering the locked section with an invalid-or-missing stamp
-    but a NONEMPTY replica log wipes the replica and re-replicates
-    from scratch — replication is change-sized, so redoing it beats
-    reasoning about which half-applied commit to resume at."""
-    import fcntl
+    Recovery discipline (ADVICE r11: the previous existence-only stamp had
+    no path out of a crashed drain — the bootstrap conflict was
+    silently adopted and the feed restarted at offset 1,
+    double-applying forever): the stamp carries the SOURCE SPEC, and a
+    build that finds a NONEMPTY replica log wipes the replica and
+    re-replicates from scratch — replication is change-sized, so
+    redoing it beats reasoning about which half-applied commit to
+    resume at."""
     import json
-    import shutil
 
-    stamp_file = os.path.join(dst_root, "_REPLICATED")
     # extra_stamp folds the SOURCE table's mutation spec in: a replica
     # of a DML'd table must re-replicate when the DML spec changes,
     # not just when the log format does
@@ -2509,29 +2447,13 @@ def _tlog_replicate(
         {"spec": _tlog_spec_stamp(), "src": extra_stamp}, sort_keys=True
     )
 
-    def _ok() -> bool:
-        try:
-            return open(stamp_file).read() == stamp
-        except OSError:
-            return False
-
-    if _ok():
-        return
-    os.makedirs(os.path.join(dst_root, "_log"), exist_ok=True)
-    lock_fh = open(os.path.join(dst_root, ".lock"), "w")
-    fcntl.flock(lock_fh, fcntl.LOCK_EX)
-    try:
-        if _ok():
-            return
+    def build() -> None:
+        os.makedirs(os.path.join(dst_root, "_log"), exist_ok=True)
         if any(
             f.endswith(".json")
             for f in os.listdir(os.path.join(dst_root, "_log"))
         ):
-            for entry in os.listdir(dst_root):
-                if entry == ".lock":
-                    continue
-                p = os.path.join(dst_root, entry)
-                shutil.rmtree(p) if os.path.isdir(p) else os.unlink(p)
+            wipe_dir(dst_root)
             os.makedirs(os.path.join(dst_root, "_log"), exist_ok=True)
         from hadoop_based_distributed_batch_processing_system_spark.sources.pyds import (
             register_table_log_feed_source,
@@ -2669,13 +2591,8 @@ def _tlog_replicate(
                 f"has {expected} change-bearing commits (head v{src_latest}) "
                 "— feed lost or double-applied a commit"
             )
-        tmp = os.path.join(dst_root, f"._REPLICATED.{os.getpid()}.tmp")
-        with open(tmp, "w") as fh:
-            fh.write(stamp)
-        os.replace(tmp, stamp_file)
-    finally:
-        fcntl.flock(lock_fh, fcntl.LOCK_UN)
-        lock_fh.close()
+
+    build_once(dst_root, "_REPLICATED", stamp, build)
 
 
 @register(
@@ -2807,10 +2724,33 @@ def _tlog_committed_batches(root: str, version: int) -> list[int]:
     return sorted(out)
 
 
+def _tlog_resume_or_wipe(
+    root: str, spec: str, spec_name: str = "_INGEST_SPEC"
+) -> None:
+    """Crash recovery for a drain that commits batch by batch (call it
+    first in the build): the spec file is written BEFORE the first
+    commit, so a root carrying a different spec, or commits with no
+    spec at all, is wiped; a matching spec is a crashed drain to
+    resume in place (batch-id dedup makes the resume safe)."""
+    spec_file = os.path.join(root, spec_name)
+    logd = os.path.join(root, "_log")
+    try:
+        stale = open(spec_file).read() != spec
+    except OSError:
+        stale = os.path.isdir(logd) and any(
+            f.endswith(".json") for f in os.listdir(logd)
+        )
+    if stale:
+        wipe_dir(root)
+    os.makedirs(logd, exist_ok=True)
+    if not os.path.exists(spec_file):
+        write_atomic(spec_file, spec)
+
+
 def _tlog_apply_ingest(spark: SparkSession, root: str) -> None:
     """Drain the bounded synthetic event stream into a table-log
-    table, ONE atomic commit per micro-batch, keyed by batch id
-    (flock-serialized). Three-layer exactly-once:
+    table, ONE atomic commit per micro-batch, keyed by batch id.
+    Three-layer exactly-once:
 
     1. the source replays any offset range deterministically
        (checkpoint-replay exactly-once, the Kafka contract);
@@ -2822,54 +2762,13 @@ def _tlog_apply_ingest(spark: SparkSession, root: str) -> None:
        rule every production streaming-into-lakehouse pipeline
        implements (Delta txn appId/version).
 
-    Recovery discipline: ``_INGEST_SPEC`` is written BEFORE the first
-    commit; a root carrying a different spec (or commits with no spec
-    at all) is wiped and re-ingested, while a matching spec with a
-    missing completion stamp is a CRASHED DRAIN — resumed in place,
-    which the batch-id dedup makes safe (ADVICE r11: the replica's
-    existence-only stamp had no such path and double-applied
-    forever)."""
-    import fcntl
-    import json
-    import shutil
-
-    stamp_file = os.path.join(root, "_INGESTED")
+    A crashed drain resumes in place (``_tlog_resume_or_wipe``; ADVICE
+    r11: the replica's existence-only stamp had no such path and
+    double-applied forever)."""
     spec = _tlog_ingest_spec()
 
-    def _ok() -> bool:
-        try:
-            return open(stamp_file).read() == spec
-        except OSError:
-            return False
-
-    if _ok():
-        return
-    os.makedirs(root, exist_ok=True)
-    lock_fh = open(os.path.join(root, ".lock"), "w")
-    fcntl.flock(lock_fh, fcntl.LOCK_EX)
-    try:
-        if _ok():
-            return
-        spec_file = os.path.join(root, "_INGEST_SPEC")
-        stale_spec = False
-        try:
-            stale_spec = open(spec_file).read() != spec
-        except OSError:
-            stale_spec = os.path.isdir(os.path.join(root, "_log")) and any(
-                f.endswith(".json") for f in os.listdir(os.path.join(root, "_log"))
-            )
-        if stale_spec:
-            for entry in os.listdir(root):
-                if entry == ".lock":
-                    continue
-                p = os.path.join(root, entry)
-                shutil.rmtree(p) if os.path.isdir(p) else os.unlink(p)
-        os.makedirs(os.path.join(root, "_log"), exist_ok=True)
-        if not os.path.exists(spec_file):
-            tmp = os.path.join(root, f"._SPEC.{os.getpid()}.tmp")
-            with open(tmp, "w") as fh:
-                fh.write(spec)
-            os.replace(tmp, spec_file)
+    def build() -> None:
+        _tlog_resume_or_wipe(root, spec)
 
         from hadoop_based_distributed_batch_processing_system_spark.sources.pyds import (
             register_synthetic_stream_source,
@@ -2923,13 +2822,8 @@ def _tlog_apply_ingest(spark: SparkSession, root: str) -> None:
                 f"ingest drained {n_commits} commits, expected {want} — "
                 "feed lost or double-applied a batch"
             )
-        tmp = os.path.join(root, f"._INGESTED.{os.getpid()}.tmp")
-        with open(tmp, "w") as fh:
-            fh.write(spec)
-        os.replace(tmp, stamp_file)
-    finally:
-        fcntl.flock(lock_fh, fcntl.LOCK_UN)
-        lock_fh.close()
+
+    build_once(root, "_INGESTED", spec, build)
 
 
 @register(
@@ -3074,32 +2968,16 @@ def _tlog_dv_frame(spark: SparkSession, root: str, dvs: dict[str, str]) -> DataF
 
 
 def _tlog_apply_dv(spark: SparkSession, sf_dir: str, root: str) -> None:
-    """Commit a DELETION VECTOR once per table dir (flock + stamp):
-    the doomed keys are written to a sidecar parquet (``dv_*`` —
-    outside the ``file_*`` data namespace, so vacuum and the data
-    regex never confuse it for a data file) and one commit binds the
-    sidecar to its target file. The target file's bytes are NEVER
-    touched."""
-    import fcntl
+    """Commit a DELETION VECTOR once per table dir: the doomed keys are
+    written to a sidecar parquet (``dv_*`` — outside the ``file_*``
+    data namespace, so vacuum and the data regex never confuse it for
+    a data file) and one commit binds the sidecar to its target file.
+    The target file's bytes are NEVER touched."""
     import json
 
     spec = _TLOG_DV_SPEC
-    stamp_file = os.path.join(root, "_DV")
-    stamp = json.dumps(spec, sort_keys=True)
 
-    def _ok() -> bool:
-        try:
-            return open(stamp_file).read() == stamp
-        except OSError:
-            return False
-
-    if _ok():
-        return
-    lock_fh = open(os.path.join(root, ".lock"), "w")
-    fcntl.flock(lock_fh, fcntl.LOCK_EX)
-    try:
-        if _ok():
-            return
+    def build() -> None:
         base = _tlog_latest_version(root)
         target_rel = spark.read.parquet(os.path.join(root, spec["target"]))
         doomed = target_rel.filter(
@@ -3112,13 +2990,8 @@ def _tlog_apply_dv(spark: SparkSession, sf_dir: str, root: str) -> None:
             root, add=[], remove=[], base_version=base,
             read_set={spec["target"]}, dv={spec["target"]: dv_name},
         )
-        tmp = os.path.join(root, f"._DV.{os.getpid()}.tmp")
-        with open(tmp, "w") as fh:
-            fh.write(stamp)
-        os.replace(tmp, stamp_file)
-    finally:
-        fcntl.flock(lock_fh, fcntl.LOCK_UN)
-        lock_fh.close()
+
+    build_once(root, "_DV", json.dumps(spec, sort_keys=True), build)
 
 
 @register(
@@ -3340,34 +3213,24 @@ _TLOG_Z_GROUPS = 8
 
 
 def _tlog_apply_zorder_compact(spark: SparkSession, sf_dir: str, root: str) -> None:
-    """Z-ORDER compaction commit once per table dir (flock + stamp):
-    rewrite the latest snapshot clustered by the Morton interleave of
-    (key bucket, price bucket) — both dimensions scaled to 8 bits
-    against their ACTUAL extents (resolved from the log's own
-    manifest stats when every live file recorded them — pure driver
-    metadata, zero data pass; agg fallback otherwise. Equal bit-width
-    is what keeps the interleave balanced: raw values would let the
-    wider dimension's bits dominate the sort and reduce Z-order to a
-    single-column cluster) — and record per-group [min, max] for
-    BOTH columns in the commit. A 1-D sorted compaction gives tight
-    bounds on its own column only; the Z-layout gives every group a
-    bounded window in EACH dimension, so manifest-stats pruning
-    works for predicates on either or both (VERDICT r11 item 5)."""
-    import fcntl
-    import json
-
+    """Z-ORDER compaction commit once per table dir: rewrite the latest
+    snapshot clustered by the Morton interleave of (key bucket, price
+    bucket) — both dimensions scaled to 8 bits against their ACTUAL
+    extents (resolved from the log's own manifest stats when every
+    live file recorded them — pure driver metadata, zero data pass;
+    agg fallback otherwise. Equal bit-width is what keeps the
+    interleave balanced: raw values would let the wider dimension's
+    bits dominate the sort and reduce Z-order to a single-column
+    cluster) — and record per-group [min, max] for BOTH columns in the
+    commit. A 1-D sorted compaction gives tight bounds on its own
+    column only; the Z-layout gives every group a bounded window in
+    EACH dimension, so manifest-stats pruning works for predicates on
+    either or both (VERDICT r11 item 5)."""
     from hadoop_based_distributed_batch_processing_system_spark.operators.sorts import (
         _morton_expr,
     )
 
-    marker = os.path.join(root, "_ZORDERED")
-    if os.path.exists(marker):
-        return
-    lock_fh = open(os.path.join(root, ".lock"), "w")
-    fcntl.flock(lock_fh, fcntl.LOCK_EX)
-    try:
-        if os.path.exists(marker):
-            return
+    def build() -> None:
         base = _tlog_latest_version(root)
         live = _tlog_live_files(root, base)
         rel = _tlog_relation(spark, live)
@@ -3429,13 +3292,8 @@ def _tlog_apply_zorder_compact(spark: SparkSession, sf_dir: str, root: str) -> N
             root, add=promoted, remove=removed, base_version=base,
             read_set=set(removed), stats=stats,
         )
-        tmp = os.path.join(root, f"._ZORDERED.{os.getpid()}.tmp")
-        with open(tmp, "w") as fh:
-            fh.write("v1")
-        os.replace(tmp, marker)
-    finally:
-        fcntl.flock(lock_fh, fcntl.LOCK_UN)
-        lock_fh.close()
+
+    build_once(root, "_ZORDERED", "v1", build)
 
 
 @register(
@@ -3669,67 +3527,32 @@ _TLOG_RESTORE_SPEC = {
 
 
 def _tlog_apply_restore_lifecycle(spark: SparkSession, sf_dir: str, root: str) -> None:
-    """Run the restore lifecycle once per table dir (flock + stamp):
-    v3 binds a DV to file_D; v4 RESTOREs to v2 (pre-DV — the kept
-    file's binding must DROP, exercising the touch path); v5 RESTOREs
-    to v3 BY TIMESTAMP (the binding must RE-BIND). Head then equals
-    the DV'd snapshot, reached purely through restore commits."""
-    import fcntl
+    """Run the restore lifecycle once per table dir: v3 binds a DV to
+    file_D; v4 RESTOREs to v2 (pre-DV — the kept file's binding must
+    DROP, exercising the touch path); v5 RESTOREs to v3 BY TIMESTAMP
+    (the binding must RE-BIND). Head then equals the DV'd snapshot,
+    reached purely through restore commits."""
     import json
 
-    stamp_file = os.path.join(root, "_RESTORED")
-    stamp = json.dumps(_TLOG_RESTORE_SPEC, sort_keys=True)
-
-    def _ok() -> bool:
-        try:
-            return open(stamp_file).read() == stamp
-        except OSError:
-            return False
-
-    if _ok():
-        return
-    lock_fh = open(os.path.join(root, ".lock"), "w")
-    fcntl.flock(lock_fh, fcntl.LOCK_EX)
-    try:
-        if _ok():
-            return
-        try:
-            # a COMPLETED lifecycle under a superseded spec/impl
-            stale = open(stamp_file).read() != stamp
-        except OSError:
-            # no stamp: resumable iff within the lifecycle's version
-            # range (the ==3/==4 gates), unknown provenance beyond it
-            stale = _tlog_latest_version(root) > 4
-        if stale:
-            # wipe and rebuild the base (the DML/ingest recovery
-            # discipline). The build and DV steps take this same
-            # flock, so release around them (flock is per-fd — a
-            # second open of the lock file blocks even within one
-            # process).
-            import shutil
-
-            for entry in os.listdir(root):
-                if entry == ".lock":
-                    continue
-                p = os.path.join(root, entry)
-                shutil.rmtree(p) if os.path.isdir(p) else os.unlink(p)
-        fcntl.flock(lock_fh, fcntl.LOCK_UN)
+    def build() -> None:
+        # a stamp here is a COMPLETED lifecycle under a superseded
+        # spec; with no stamp the log is resumable iff within the
+        # lifecycle's version range (the ==3/==4 gates)
+        if (
+            os.path.exists(os.path.join(root, "_RESTORED"))
+            or _tlog_latest_version(root) > 4
+        ):
+            wipe_dir(root)
         _tlog_build(spark, sf_dir, root)  # no-op when intact
         _tlog_apply_dv(spark, sf_dir, root)  # v3: DV on file_D
-        fcntl.flock(lock_fh, fcntl.LOCK_EX)
-        if _ok():
-            return
         if _tlog_latest_version(root) == 3:
             _tlog_restore(root, to_version=2)  # v4: binding drops
         if _tlog_latest_version(root) == 4:
             _tlog_restore(root, to_ts=_tlog_commit_ts(root, 3))  # v5: rebinds
-        tmp = os.path.join(root, f"._RESTORED.{os.getpid()}.tmp")
-        with open(tmp, "w") as fh:
-            fh.write(stamp)
-        os.replace(tmp, stamp_file)
-    finally:
-        fcntl.flock(lock_fh, fcntl.LOCK_UN)
-        lock_fh.close()
+
+    build_once(
+        root, "_RESTORED", json.dumps(_TLOG_RESTORE_SPEC, sort_keys=True), build
+    )
 
 
 @register(
@@ -4051,60 +3874,22 @@ def _tlog_dml_spec_json() -> str:
 
 
 def _tlog_apply_dml(spark: SparkSession, sf_dir: str, root: str) -> None:
-    """Apply the registry DELETE then UPDATE once per table dir
-    (flock + stamp). Order is part of the spec: the UPDATE's
+    """Apply the registry DELETE then UPDATE once per table dir.
+    Order is part of the spec: the UPDATE's
     predicate (%12==0) and the DELETE's (%251==7) are disjoint over
     int keys only where 251 doesn't divide — they do intersect (e.g.
     3012 if %251==7... the oracle composes both regardless), so the
     serial order DELETE-then-UPDATE is what the oracle recomputes."""
-    import fcntl
 
-    stamp_file = os.path.join(root, "_DML")
-    stamp = _tlog_dml_spec_json()
-
-    def _ok() -> bool:
-        try:
-            return open(stamp_file).read() == stamp
-        except OSError:
-            return False
-
-    if _ok():
-        return
-    lock_fh = open(os.path.join(root, ".lock"), "w")
-    fcntl.flock(lock_fh, fcntl.LOCK_EX)
-    try:
-        if _ok():
-            return
-        if _tlog_latest_version(root) != 2:
-            # mutations from a superseded spec/impl on this root:
-            # wipe and rebuild the base (the ingest recovery
-            # discipline — DML composes on exact versions). The
-            # build takes this same flock, so release around it.
-            import shutil
-
-            for entry in os.listdir(root):
-                if entry == ".lock":
-                    continue
-                p = os.path.join(root, entry)
-                shutil.rmtree(p) if os.path.isdir(p) else os.unlink(p)
-            fcntl.flock(lock_fh, fcntl.LOCK_UN)
-            _tlog_build(spark, sf_dir, root)
-            fcntl.flock(lock_fh, fcntl.LOCK_EX)
-            if _ok():
-                return
+    def build() -> None:
         if _tlog_latest_version(root) == 2:
             _tlog_dml_delete_where(spark, root, _TLOG_DELETE_PRED)
         if _tlog_latest_version(root) == 3:
             _tlog_dml_update_set(
                 spark, root, _TLOG_UPDATE_PRED, _TLOG_UPDATE_BUMP
             )
-        tmp = os.path.join(root, f"._DML.{os.getpid()}.tmp")
-        with open(tmp, "w") as fh:
-            fh.write(stamp)
-        os.replace(tmp, stamp_file)
-    finally:
-        fcntl.flock(lock_fh, fcntl.LOCK_UN)
-        lock_fh.close()
+
+    _tlog_apply_once(spark, sf_dir, root, "_DML", _tlog_dml_spec_json(), build)
 
 
 def _tlog_dml_fingerprint(spark: SparkSession, root: str) -> DataFrame:

@@ -23,7 +23,12 @@ import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 
 from hadoop_based_distributed_batch_processing_system_spark.registry import register
-from hadoop_based_distributed_batch_processing_system_spark.sources.io import load_table, parquet_row_count
+from hadoop_based_distributed_batch_processing_system_spark.sources.io import (
+    build_once,
+    load_table,
+    parquet_row_count,
+    wipe_dir,
+)
 
 _DIM = 64
 # ceiling for the O(n^2) ground-truth operator; ANN paths take over past it
@@ -1849,29 +1854,13 @@ def _ivf_index_build(
     in-place overwrite of unversioned files could expose a reader
     that passed the old stamp mid-query to a half-overwritten file
     set — now its snapshot's files are immutable until vacuumed, and
-    time travel to the prior index is free). flock-serialized +
-    stamp-keyed like every other /tmp artifact build in this repo."""
-    import fcntl
-    import json
+    time travel to the prior index is free)."""
     import os
 
     root = root or _ivf_index_root(sf_dir)
-    built = os.path.join(root, "_BUILT")
 
-    def _ok() -> bool:
-        try:
-            return open(built).read() == _ivf_index_stamp(sf_dir)
-        except OSError:
-            return False
-
-    if _ok():
-        return root
-    os.makedirs(os.path.join(root, "_log"), exist_ok=True)
-    lock_fh = open(os.path.join(root, ".lock"), "w")
-    fcntl.flock(lock_fh, fcntl.LOCK_EX)
-    try:
-        if _ok():
-            return root
+    def build() -> None:
+        os.makedirs(os.path.join(root, "_log"), exist_ok=True)
         from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
             _tlog_commit_rebase,
             _tlog_latest_version,
@@ -1905,14 +1894,8 @@ def _ivf_index_build(
         _tlog_commit_rebase(
             root, add=add, remove=old, base_version=base, read_set=set(old)
         )
-        tmp = os.path.join(root, f"._BUILT.{os.getpid()}.tmp")
-        with open(tmp, "w") as fh:
-            fh.write(_ivf_index_stamp(sf_dir))
-        os.replace(tmp, built)
-    finally:
-        fcntl.flock(lock_fh, fcntl.LOCK_UN)
-        lock_fh.close()
-    return root
+
+    return build_once(root, "_BUILT", _ivf_index_stamp(sf_dir), build)
 
 
 @register("sim_search_ann_ivf_persisted", tags=("L3", "ann", "ivf", "index"))  # rows-only: approximate by design
@@ -2057,14 +2040,12 @@ def _ivf_index_append_delta(
     rebuilt index would silently DROP the appended vectors and, the
     fraction being corpus-determined, every later append would
     retrain again; ADVICE r13)."""
-    import fcntl
     import json
     import os
 
     import numpy as np
 
     root = _ivf_index_build(spark, sf_dir)
-    stamp_file = os.path.join(root, f"_DELTA_b{batch}")
     stamp = json.dumps(
         {
             "index": _ivf_index_stamp(sf_dir),
@@ -2076,19 +2057,7 @@ def _ivf_index_append_delta(
         sort_keys=True,
     )
 
-    def _ok() -> bool:
-        try:
-            return open(stamp_file).read() == stamp
-        except OSError:
-            return False
-
-    if _ok():
-        return root
-    lock_fh = open(os.path.join(root, ".lock"), "w")
-    fcntl.flock(lock_fh, fcntl.LOCK_EX)
-    try:
-        if _ok():
-            return root
+    def build() -> None:
         from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
             _tlog_commit_rebase,
             _tlog_latest_version,
@@ -2105,11 +2074,7 @@ def _ivf_index_append_delta(
             # batch already committed against this generation — a
             # lost stamp (crash between commit and stamp) must adopt,
             # not stack a duplicate commit
-            tmp = os.path.join(root, f"._DELTA_b{batch}.{os.getpid()}.tmp")
-            with open(tmp, "w") as fh:
-                fh.write(stamp)
-            os.replace(tmp, stamp_file)
-            return root
+            return
         delta = _ivf_delta_frame(spark, sf_dir, batch)
         n_delta, n_base = delta.count(), load_table(
             spark, sf_dir, "embeddings"
@@ -2129,13 +2094,12 @@ def _ivf_index_append_delta(
                 for b in outstanding
             )
             if n_out + n_delta > n_base * _IVF_DELTA_REBUILD_FRACTION:
-                fcntl.flock(lock_fh, fcntl.LOCK_UN)  # refresh takes this lock
-                root = _ivf_index_refresh(spark, sf_dir)
+                _ivf_index_refresh(spark, sf_dir)
                 # fold the outstanding batches AND this one into the
                 # new generation: re-assign against the NEW centroids
                 for b in outstanding + [batch]:
                     _ivf_index_append_delta(spark, sf_dir, batch=b, _fold=True)
-                return root
+                return
         cent_rows = (
             spark.read.parquet(live[cent_name]).orderBy("cluster").collect()
         )
@@ -2155,14 +2119,8 @@ def _ivf_index_append_delta(
             base_version=base,
             read_set={cent_name},
         )
-        tmp = os.path.join(root, f"._DELTA_b{batch}.{os.getpid()}.tmp")
-        with open(tmp, "w") as fh:
-            fh.write(stamp)
-        os.replace(tmp, stamp_file)
-    finally:
-        fcntl.flock(lock_fh, fcntl.LOCK_UN)
-        lock_fh.close()
-    return root
+
+    return build_once(root, f"_DELTA_b{batch}", stamp, build)
 
 
 @register("sim_search_ann_ivf_delta", tags=("L3", "ann", "ivf", "index", "incremental"))  # rows-only: approximate by design
@@ -2557,27 +2515,13 @@ def _ivfq_index_build(spark: SparkSession, sf_dir: str, root: str | None = None)
     (readers of the old snapshot keep their immutable files until
     vacuum), the float index family's discipline applied to the
     hash-oracled rung. Stamp-keyed on the training spec + source
-    parquet identity; flock-serialized."""
-    import fcntl
+    parquet identity."""
     import os
 
     root = root or _ivfq_index_root(sf_dir)
-    built = os.path.join(root, "_BUILT")
 
-    def _ok() -> bool:
-        try:
-            return open(built).read() == _ivfq_index_stamp(sf_dir)
-        except OSError:
-            return False
-
-    if _ok():
-        return root
-    os.makedirs(os.path.join(root, "_log"), exist_ok=True)
-    lock_fh = open(os.path.join(root, ".lock"), "w")
-    fcntl.flock(lock_fh, fcntl.LOCK_EX)
-    try:
-        if _ok():
-            return root
+    def build() -> None:
+        os.makedirs(os.path.join(root, "_log"), exist_ok=True)
         from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
             _tlog_commit_rebase,
             _tlog_latest_version,
@@ -2620,14 +2564,8 @@ def _ivfq_index_build(spark: SparkSession, sf_dir: str, root: str | None = None)
             root, add=sorted(add), remove=old, base_version=base,
             read_set=set(old),
         )
-        tmp = os.path.join(root, f"._BUILT.{os.getpid()}.tmp")
-        with open(tmp, "w") as fh:
-            fh.write(_ivfq_index_stamp(sf_dir))
-        os.replace(tmp, built)
-    finally:
-        fcntl.flock(lock_fh, fcntl.LOCK_UN)
-        lock_fh.close()
-    return root
+
+    return build_once(root, "_BUILT", _ivfq_index_stamp(sf_dir), build)
 
 
 @register(
@@ -2732,26 +2670,12 @@ def _ivfq_index_append_delta(spark: SparkSession, sf_dir: str, root: str) -> Non
     CENTROIDS (no retrain — the IVF delta rule; recall debt is the
     documented trade until the next generation) and land as
     per-cluster delta groups (``file_qdlist{{c}}_...``) in ONE
-    add-only commit. Stamp-keyed + flock-serialized."""
-    import fcntl
+    add-only commit. Stamp-keyed."""
     import os
 
-    stamp_file = os.path.join(root, "_QDELTA")
     stamp = _ivfq_index_stamp(sf_dir) + f"+d{_IVFQ_DELTA_MOD}.{_IVFQ_DELTA_RES}"
 
-    def _ok() -> bool:
-        try:
-            return open(stamp_file).read() == stamp
-        except OSError:
-            return False
-
-    if _ok():
-        return
-    lock_fh = open(os.path.join(root, ".lock"), "w")
-    fcntl.flock(lock_fh, fcntl.LOCK_EX)
-    try:
-        if _ok():
-            return
+    def build() -> None:
         from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
             _tlog_commit_rebase,
             _tlog_latest_version,
@@ -2794,13 +2718,8 @@ def _ivfq_index_append_delta(spark: SparkSession, sf_dir: str, root: str) -> Non
         _tlog_commit_rebase(
             root, add=sorted(add), remove=[], base_version=base, read_set=set()
         )
-        tmp = os.path.join(root, f"._QDELTA.{os.getpid()}.tmp")
-        with open(tmp, "w") as fh:
-            fh.write(stamp)
-        os.replace(tmp, stamp_file)
-    finally:
-        fcntl.flock(lock_fh, fcntl.LOCK_UN)
-        lock_fh.close()
+
+    build_once(root, "_QDELTA", stamp, build)
 
 
 def _ivfq_delta_oracle() -> str:
@@ -3338,8 +3257,8 @@ def _ivfq_vac_roots(sf_dir: str) -> tuple[str, str]:
 
 
 def _ivfq_apply_vac(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
-    """Run the quantized-index RETENTION lifecycle once per corpus
-    (flock + stamp): build g0 (v0) → delta append (v1) → a CATALOG
+    """Run the quantized-index RETENTION lifecycle once per corpus:
+    build g0 (v0) → delta append (v1) → a CATALOG
     pins v1 (a reader's reproducibility pin on the pre-retrain
     index) → drift rebuild publishes g1 (v2) → a FLOORED vacuum at
     the head horizon clamps to the pin and reclaims NOTHING → the
@@ -3349,7 +3268,6 @@ def _ivfq_apply_vac(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     groups. Both vacuum outcomes are asserted in-lifecycle: a sweep
     that deletes under a pin, or fails to reclaim after the pin
     moves, poisons the stamp and fails loudly."""
-    import fcntl
     import os
     import shutil
 
@@ -3360,41 +3278,17 @@ def _ivfq_apply_vac(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     )
 
     root, cat = _ivfq_vac_roots(sf_dir)
-    stamp_file = os.path.join(root, "_QVAC")
-    stamp = _ivfq_index_stamp(sf_dir) + "+vac1"
 
-    def _ok() -> bool:
-        try:
-            return open(stamp_file).read() == stamp
-        except OSError:
-            return False
-
-    if _ok():
-        return root, cat
-    # prefix steps hold their own flock on root/.lock — run them
-    # before taking ours (the _tlog_apply_cmu ordering rule)
-    _ivfq_index_build(spark, sf_dir, root)
-    _ivfq_index_append_delta(spark, sf_dir, root)
-    lock_fh = open(os.path.join(root, ".lock"), "w")
-    fcntl.flock(lock_fh, fcntl.LOCK_EX)
-    try:
-        if _ok():
-            return root, cat
+    def build() -> None:
+        _ivfq_index_build(spark, sf_dir, root)
+        _ivfq_index_append_delta(spark, sf_dir, root)
         if _tlog_latest_version_safe(root) != 1 or os.path.isdir(cat):
             # stale partial lifecycle: wipe both roots and redo the
-            # prefix under its own locks
+            # prefix
             shutil.rmtree(cat, ignore_errors=True)
-            for entry in os.listdir(root):
-                if entry == ".lock":
-                    continue
-                p = os.path.join(root, entry)
-                shutil.rmtree(p) if os.path.isdir(p) else os.unlink(p)
-            fcntl.flock(lock_fh, fcntl.LOCK_UN)
+            wipe_dir(root)
             _ivfq_index_build(spark, sf_dir, root)
             _ivfq_index_append_delta(spark, sf_dir, root)
-            fcntl.flock(lock_fh, fcntl.LOCK_EX)
-            if _ok():
-                return root, cat
         _tlog_catalog_commit(cat, {"qidx": {"root": root, "version": 1}}, base=-1)
         rebuilt, drift, head = _ivfq_maybe_rebuild(spark, root)
         if not rebuilt or head != 2:
@@ -3424,13 +3318,8 @@ def _ivfq_apply_vac(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
                 f"post-advance vacuum must reclaim generation 0, got "
                 f"(effective={eff2}, deleted={del2})"
             )
-        tmp = os.path.join(root, f"._QVAC.{os.getpid()}.tmp")
-        with open(tmp, "w") as fh:
-            fh.write(stamp)
-        os.replace(tmp, stamp_file)
-    finally:
-        fcntl.flock(lock_fh, fcntl.LOCK_UN)
-        lock_fh.close()
+
+    build_once(root, "_QVAC", _ivfq_index_stamp(sf_dir) + "+vac1", build)
     return root, cat
 
 

@@ -100,8 +100,10 @@ def interpolate_docstrings(module_globals: dict) -> None:
 
 def load_all() -> dict[str, QuerySpec]:
     """Import every operator module so registrations run, then return
-    the registry. Import errors in optional modules must not hide the
-    rest of the surface, so modules are imported individually."""
+    the registry. An import error in any module propagates: callers
+    (the driver entry points in ``__spark_entry__.py``) must never run
+    on a partial registry, where missing queries would look like an
+    absent surface instead of a broken one."""
     import importlib
 
     modules = [

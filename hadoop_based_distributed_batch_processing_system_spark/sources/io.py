@@ -62,6 +62,104 @@ def corpus_tag(sf_dir: str) -> str:
     return h.hexdigest()[:16]
 
 
+def write_atomic(path: str, text: str) -> None:
+    """Write ``text`` to ``path`` so readers see the old content or
+    the new, never a partial file (write a pid-unique temp, rename)."""
+    import os
+
+    d, name = os.path.split(path)
+    tmp = os.path.join(d, f".{name}.{os.getpid()}.tmp")
+    with open(tmp, "w") as fh:
+        fh.write(text)
+    os.replace(tmp, path)
+
+
+def wipe_dir(root: str) -> None:
+    """Delete everything under ``root`` except ``.lock``, the build
+    lock a :func:`build_once` caller may be holding."""
+    import os
+    import shutil
+
+    for entry in os.listdir(root):
+        if entry == ".lock":
+            continue
+        p = os.path.join(root, entry)
+        shutil.rmtree(p) if os.path.isdir(p) else os.unlink(p)
+
+
+import threading
+
+
+class _HeldLocks(threading.local):
+    """Roots whose build lock this thread holds (build_once re-enters
+    them); per thread, because flock excludes other threads too."""
+
+    def __init__(self) -> None:
+        self.roots: set[str] = set()
+
+
+_HELD_LOCKS = _HeldLocks()
+
+
+def build_once(root: str, stamp_name: str, stamp: str, build, *, ready=None) -> str:
+    """Run ``build()`` once per ``root`` across threads and processes;
+    return ``root``. This is the one build-once protocol every derived
+    temp-dir fixture uses (a task's output becomes visible only through
+    one atomic commit step, so a crashed or concurrent build is safe
+    to re-execute):
+
+    1. fast path: ``root/stamp_name`` holds exactly ``stamp`` (the
+       fixture's spec, serialized) and ``ready()`` (if given) confirms
+       the artifacts the stamp promises — return without locking;
+    2. ``mkdir root`` and take an exclusive ``flock`` on ``root/.lock``;
+    3. check the stamp again: the build may have finished while this
+       caller waited;
+    4. ``build()`` — it wipes stale state (:func:`wipe_dir`) if it
+       needs a clean root, or resumes a crashed build in place;
+    5. write the stamp atomically, as the LAST step: a build that
+       raises leaves no stamp, and the next call reruns it;
+    6. unlock, also when the build raises.
+
+    The lock is re-entrant per thread: a build that calls
+    ``build_once`` on the same root (a derived fixture rebuilding its
+    base) runs the nested build under the lock it already holds,
+    since a second ``flock`` on a new descriptor would deadlock."""
+    import fcntl
+    import os
+
+    stamp_file = os.path.join(root, stamp_name)
+
+    def done() -> bool:
+        try:
+            with open(stamp_file) as fh:
+                if fh.read() != stamp:
+                    return False
+        except OSError:
+            return False
+        return ready is None or ready()
+
+    if done():
+        return root
+    held = _HELD_LOCKS.roots
+    key = os.path.abspath(root)
+    if key in held:
+        build()
+        write_atomic(stamp_file, stamp)
+        return root
+    os.makedirs(root, exist_ok=True)
+    with open(os.path.join(root, ".lock"), "w") as lock_fh:
+        fcntl.flock(lock_fh, fcntl.LOCK_EX)
+        held.add(key)
+        try:
+            if not done():
+                build()
+                write_atomic(stamp_file, stamp)
+        finally:
+            held.discard(key)
+            fcntl.flock(lock_fh, fcntl.LOCK_UN)
+    return root
+
+
 # file identity -> ("timestamp", unit, tz-aware) | ("int64", unit)
 # Keyed on file identity so an in-place corpus regeneration re-probes.
 _TS_SPEC_CACHE: dict = {}

@@ -30,7 +30,12 @@ import pyspark.sql.types as T
 from pyspark.sql import DataFrame, SparkSession
 
 from hadoop_based_distributed_batch_processing_system_spark.registry import register
-from hadoop_based_distributed_batch_processing_system_spark.sources.io import corpus_tag, events_ts_spec
+from hadoop_based_distributed_batch_processing_system_spark.sources.io import (
+    build_once,
+    corpus_tag,
+    events_ts_spec,
+    wipe_dir,
+)
 from hadoop_based_distributed_batch_processing_system_spark.streaming.event_time import (
     SLIDING_ORACLE,
     TUMBLING_ORACLE,
@@ -1622,13 +1627,11 @@ def _tlog_mv_live_drain(
     view from the v0 snapshot, then each micro-batch (exactly one
     source commit's row transitions, DV-complete) folds SIGNED deltas
     into the view — one transactional view commit per source commit,
-    batch-keyed for replay idempotence. Flock + stamp with the
-    replica's recovery discipline (wipe a stamp-less nonempty view
-    and re-drain; the drain is change-sized)."""
-    import fcntl
+    batch-keyed for replay idempotence. Recovery follows the
+    replica's rule: wipe a stamp-less nonempty view and re-drain (the
+    drain is change-sized)."""
     import json
     import os
-    import shutil
 
     from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
         TableLogConflictError,
@@ -1654,20 +1657,8 @@ def _tlog_mv_live_drain(
         sort_keys=True,
     )
 
-    def _ok() -> bool:
-        try:
-            return open(stamp_file).read() == stamp
-        except OSError:
-            return False
-
-    if _ok():
-        return
-    os.makedirs(os.path.join(mv_root, "_log"), exist_ok=True)
-    lock_fh = open(os.path.join(mv_root, ".lock"), "w")
-    fcntl.flock(lock_fh, fcntl.LOCK_EX)
-    try:
-        if _ok():
-            return
+    def build() -> None:
+        os.makedirs(os.path.join(mv_root, "_log"), exist_ok=True)
         # a view whose SPEC matches but whose "through" lags the
         # source RESUMES from its stream checkpoint (the incremental
         # catch-up production MVs run on a schedule); anything else
@@ -1684,11 +1675,7 @@ def _tlog_mv_live_drain(
             for f in os.listdir(os.path.join(mv_root, "_log"))
         )
         if has_log and not resume:
-            for entry in os.listdir(mv_root):
-                if entry == ".lock":
-                    continue
-                p = os.path.join(mv_root, entry)
-                shutil.rmtree(p) if os.path.isdir(p) else os.unlink(p)
+            wipe_dir(mv_root)
             os.makedirs(os.path.join(mv_root, "_log"), exist_ok=True)
             has_log = False
         if not has_log:
@@ -1785,13 +1772,8 @@ def _tlog_mv_live_drain(
                 "change-bearing source commits — a fold was lost or "
                 "double-applied"
             )
-        tmp = os.path.join(mv_root, f"._MV_LIVE.{os.getpid()}.tmp")
-        with open(tmp, "w") as fh:
-            fh.write(stamp)
-        os.replace(tmp, stamp_file)
-    finally:
-        fcntl.flock(lock_fh, fcntl.LOCK_UN)
-        lock_fh.close()
+
+    build_once(mv_root, "_MV_LIVE", stamp, build)
 
 
 @register(
