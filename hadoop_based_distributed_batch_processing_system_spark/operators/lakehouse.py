@@ -30,6 +30,7 @@ from hadoop_based_distributed_batch_processing_system_spark.registry import (
     interpolate_docstrings,
     register,
 )
+from hadoop_based_distributed_batch_processing_system_spark.session import bounded_drain
 from hadoop_based_distributed_batch_processing_system_spark.sources.io import (
     build_once,
     corpus_tag,
@@ -3816,9 +3817,7 @@ def stream_catalog_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("cat_version", "tbl", "side", "n_rows", "sum_cents")
     )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with bounded_drain(spark):
         query = (
             agg.writeStream.format("memory")
             .queryName("hbdbps_stream_catalog_cdf")
@@ -3828,8 +3827,6 @@ def stream_catalog_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         query.processAllAvailable()
         query.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     return spark.table("hbdbps_stream_catalog_cdf")
 
 
@@ -3977,9 +3974,7 @@ def _tlog_apply_ccr(spark: SparkSession, sf_dir: str) -> tuple[dict, str]:
             .option("catalog", src_cat)
             .load()
         )
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        try:
+        with bounded_drain(spark):
             q = (
                 raw.writeStream.foreachBatch(apply_swap)
                 .trigger(processingTime="0 seconds")
@@ -3987,8 +3982,6 @@ def _tlog_apply_ccr(spark: SparkSession, sf_dir: str) -> tuple[dict, str]:
             )
             q.processAllAvailable()
             q.stop()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
         if _tlog_catalog_latest(dst_cat) != _tlog_catalog_latest(src_cat):
             raise RuntimeError(
                 "downstream catalog drifted: "

@@ -21,6 +21,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from hadoop_based_distributed_batch_processing_system_spark.registry import register
+from hadoop_based_distributed_batch_processing_system_spark.session import bounded_drain
 from hadoop_based_distributed_batch_processing_system_spark.sources.io import (
     build_once,
     corpus_tag,
@@ -2563,9 +2564,7 @@ def _tlog_replicate(
 
         register_table_log_feed_source(spark)
         raw = spark.readStream.format("table_log_feed").option("root", src_root).load()
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        try:
+        with bounded_drain(spark):
             query = (
                 raw.writeStream.foreachBatch(apply_commit)
                 .trigger(processingTime="0 seconds")
@@ -2573,8 +2572,6 @@ def _tlog_replicate(
             )
             query.processAllAvailable()
             query.stop()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
         src_latest = _tlog_latest_version(src_root)
         dst_latest = _tlog_latest_version(dst_root)
         # one replica commit per source commit WITH change units —

@@ -30,6 +30,8 @@ import pyspark.sql.functions as F
 import pyspark.sql.types as T
 from pyspark.sql import DataFrame, SparkSession
 
+from hadoop_based_distributed_batch_processing_system_spark.session import core_parallelism
+
 TABLES = (
     "region",
     "nation",
@@ -315,8 +317,9 @@ def spread_small_scan(df: DataFrame, key: str) -> DataFrame:
     the machine idles; several operators' docstrings already said
     "repartition to #cores before this stage" without doing it.
 
-    Fires ONLY when the scan's planned parallelism is below the
-    session's configured shuffle parallelism (capped by cores) — at
+    Fires ONLY when the scan's planned parallelism is below
+    :func:`...session.core_parallelism` (the session's configured
+    shuffle parallelism, capped by cores) — at
     production scale (or any input with >= that many splits) this is
     a literal no-op and adds no shuffle; the cost when it does fire
     is one exchange of the small scan itself. The target is
@@ -331,11 +334,7 @@ def spread_small_scan(df: DataFrame, key: str) -> DataFrame:
     never rand(); SPARK-38388), so a retried map task reproduces the
     same row placement.
     """
-    sess = df.sparkSession
-    p = min(
-        sess.sparkContext.defaultParallelism,
-        int(sess.conf.get("spark.sql.shuffle.partitions", "200")),
-    )
+    p = core_parallelism(df.sparkSession)
     if df.rdd.getNumPartitions() >= p:
         return df
     return df.repartition(p, F.col(key))

@@ -30,6 +30,7 @@ import pyspark.sql.types as T
 from pyspark.sql import DataFrame, SparkSession
 
 from hadoop_based_distributed_batch_processing_system_spark.registry import register
+from hadoop_based_distributed_batch_processing_system_spark.session import bounded_drain
 from hadoop_based_distributed_batch_processing_system_spark.sources.io import (
     build_once,
     corpus_tag,
@@ -145,22 +146,10 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _run_to_memory(result: DataFrame, name: str, output_mode: str) -> DataFrame:
-    """Execute a bounded stream to a memory sink and return the table.
-
-    Shuffle-partition count is pinned low for the duration of the run:
-    every micro-batch schedules one task per shuffle partition PER
-    stateful operator (each with its own state store), so a 10k-row
-    bounded demo stream under an external session's 200-partition
-    default pays ~25× task/state overhead for zero parallelism gain
-    (measured: stream_stream_join 29s → 3s). A production job sizes
-    this to cluster cores before the first checkpoint instead — state
-    partitioning is frozen once a checkpoint exists. The conf is
-    restored afterwards so the caller's batch queries are untouched
-    (streaming queries bind the value at .start())."""
+    """Execute a bounded stream to a memory sink and return the table
+    (under :func:`...session.bounded_drain`)."""
     spark = result.sparkSession
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with bounded_drain(spark):
         query = (
             result.writeStream.format("memory")
             .queryName(name)
@@ -169,8 +158,6 @@ def _run_to_memory(result: DataFrame, name: str, output_mode: str) -> DataFrame:
             .start()
         )
         query.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     return spark.table(name)
 
 
@@ -608,11 +595,10 @@ def stream_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     checkpoint-replay exactly-once, same contract as a Kafka offset
     range. The bounded demo source emits 10k closed-form rows in
     2.5k-row micro-batches into a memory sink (4 micro-batches,
-    drained with ``processAllAvailable`` — availableNow captures only
-    the first batch of a simple reader); the appended union is
-    hash-checked against a DuckDB generate_series oracle, proving no
-    batch was dropped or double-emitted. ``sf_dir`` unused — the
-    source is the data."""
+    drained under :func:`...session.bounded_drain`); the appended
+    union is hash-checked against a DuckDB generate_series oracle,
+    proving no batch was dropped or double-emitted. ``sf_dir``
+    unused — the source is the data."""
     from hadoop_based_distributed_batch_processing_system_spark.sources.pyds import (
         register_synthetic_stream_source,
     )
@@ -624,9 +610,7 @@ def stream_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("batch", "2500")
         .load()
     )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with bounded_drain(spark):
         query = (
             raw.writeStream.format("memory")
             .queryName("hbdbps_stream_pyds")
@@ -636,8 +620,6 @@ def stream_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         query.processAllAvailable()
         query.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     return spark.table("hbdbps_stream_pyds")
 
 
@@ -1520,9 +1502,7 @@ def stream_table_log_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("version", "side", "n_rows", "sum_cents")
     )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with bounded_drain(spark):
         query = (
             agg.writeStream.format("memory")
             .queryName("hbdbps_stream_tlog_feed")
@@ -1530,12 +1510,8 @@ def stream_table_log_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
             .trigger(processingTime="0 seconds")
             .start()
         )
-        # availableNow captures only a simple reader's first batch
-        # (same caveat as stream_python_datasource) — drain instead
         query.processAllAvailable()
         query.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     return spark.table("hbdbps_stream_tlog_feed")
 
 
@@ -1571,9 +1547,8 @@ def stream_table_log_feed_partitioned(spark: SparkSession, sf_dir: str) -> DataF
     only the log. Offsets are commit versions as in the simple
     reader; both stream paths and the batch reader are hash-checked
     against the SAME oracle, so all three consumption modes provably
-    agree. availableNow works with a partitioned reader (it
-    snapshots latestOffset at start), so the drain is a plain
-    bounded run.
+    agree. The drain is a plain bounded ``availableNow`` run
+    (:func:`...session.bounded_drain`).
 
     Scale: this is the shape that ingests a high-commit-rate 100-TB
     table — per-trigger work is (files changed) tasks wide, state is

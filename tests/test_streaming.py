@@ -1,13 +1,26 @@
 """Invariant tests for the streaming path (rows-only operators) and
 batch/stream equivalence."""
 
+import os
+import re
+
 import pyspark.sql.functions as F
+import pytest
+from pyspark.errors import StreamingQueryException
 
 from hadoop_based_distributed_batch_processing_system_spark.registry import load_all
+from hadoop_based_distributed_batch_processing_system_spark.session import bounded_drain
+from hadoop_based_distributed_batch_processing_system_spark.streaming.stream_jobs import (
+    read_events_stream,
+)
 from tests.conftest import SF_SMOKE
 from tests.oracle import canon_frame
 
 REG = load_all()
+PACKAGE = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    "hadoop_based_distributed_batch_processing_system_spark",
+)
 
 
 def test_stream_tumbling_equals_batch(spark):
@@ -255,3 +268,79 @@ def test_mv_live_folds_commits_landing_mid_drain(spark, tmp_path, monkeypatch):
         assert total == want
     finally:
         shutil.rmtree(src, ignore_errors=True)
+
+
+_SHUFFLE = "spark.sql.shuffle.partitions"
+_CKPT_MANAGER = "spark.sql.streaming.checkpointFileManagerClass"
+
+
+def _stateful_drain(spark, name):
+    """Per-user event counts over the events file stream, drained to a
+    memory sink; returns (rows, the query's state partition count)."""
+    agg = read_events_stream(spark, SF_SMOKE).groupBy("user_id").count()
+    query = (
+        agg.writeStream.format("memory")
+        .queryName(name)
+        .outputMode("complete")
+        .trigger(availableNow=True)
+        .start()
+    )
+    query.awaitTermination()
+    parts = query.lastProgress["stateOperators"][0]["numShufflePartitions"]
+    return sorted(tuple(r) for r in spark.table(name).collect()), parts
+
+
+def test_bounded_drain_sizes_state_to_cores_and_restores_confs(spark):
+    prev = spark.conf.get(_SHUFFLE)
+    assert spark.conf.get(_CKPT_MANAGER, None) is None
+    want, _ = _stateful_drain(spark, "hbdbps_test_drain_default")
+    spark.conf.set(_SHUFFLE, "2")
+    try:
+        with bounded_drain(spark):
+            assert spark.conf.get(_CKPT_MANAGER, None)
+            rows, parts = _stateful_drain(spark, "hbdbps_test_drain_capped")
+        assert parts == 2  # min(8 cores, 2 shuffle partitions)
+        assert rows == want
+        assert spark.conf.get(_SHUFFLE) == "2"
+        assert spark.conf.get(_CKPT_MANAGER, None) is None
+
+        def fail(batch_df, batch_id):
+            raise RuntimeError("drain failed")
+
+        with pytest.raises(StreamingQueryException, match="drain failed"):
+            with bounded_drain(spark):
+                query = (
+                    read_events_stream(spark, SF_SMOKE)
+                    .writeStream.foreachBatch(fail)
+                    .trigger(processingTime="0 seconds")
+                    .start()
+                )
+                try:
+                    query.processAllAvailable()
+                finally:
+                    query.stop()
+        assert spark.conf.get(_SHUFFLE) == "2"
+        assert spark.conf.get(_CKPT_MANAGER, None) is None
+    finally:
+        spark.conf.set(_SHUFFLE, prev)
+
+
+def test_drain_policy_lives_in_session_module():
+    """The bounded-drain policy is stated once: no drain pins a literal
+    partition count, and only the helper's module picks a checkpoint
+    manager (the durable ``checkpointLocation`` writers keep Spark's
+    default)."""
+    pinned = re.compile(r"""["']spark\.sql\.shuffle\.partitions["']\s*,\s*["']8["']""")
+    pins, managers = [], []
+    for dirpath, _, files in os.walk(PACKAGE):
+        for f in files:
+            if not f.endswith(".py"):
+                continue
+            path = os.path.join(dirpath, f)
+            src = open(path).read()
+            if pinned.search(src):
+                pins.append(os.path.relpath(path, PACKAGE))
+            if "checkpointFileManagerClass" in src:
+                managers.append(os.path.relpath(path, PACKAGE))
+    assert pins == []
+    assert managers == ["session.py"]
